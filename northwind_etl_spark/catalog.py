@@ -11,8 +11,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from .schemas import TABLES
-
 # Declared FK relationships of the test star schema (fact_key, dim,
 # dim_key) — the metadata the reference read from sys.foreign_keys.
 RELATIONSHIPS: list[tuple[str, str, str, str]] = [
@@ -42,8 +40,3 @@ def referencing_tables(table: str) -> list[tuple[str, str, str]]:
         for child, child_key, parent, parent_key in RELATIONSHIPS
         if parent == table
     ]
-
-
-def schema_of(table: str):
-    """Registry lookup (the reference's hand-written DDL equivalent)."""
-    return TABLES[table]

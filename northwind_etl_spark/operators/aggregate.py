@@ -15,12 +15,8 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-
-def group_agg(df: DataFrame, keys: Sequence[str], *aggs: Column) -> DataFrame:
-    return df.groupBy(*keys).agg(*aggs)
 
 
 def table_count(df: DataFrame, alias: str = "n_rows") -> DataFrame:

@@ -51,13 +51,6 @@ def _l2sq_to_literal(vec_col, lit_vals: list[float], offset: int, width: int):
     return F.aggregate(diffs, F.lit(0.0), lambda acc, x: acc + x)
 
 
-def _dot_to_literal(vec_col, lit_vals: list[float], offset: int, width: int):
-    sub = F.slice(vec_col, offset + 1, width)
-    lits = lit_double_array(lit_vals[offset : offset + width])
-    prods = F.zip_with(sub, lits, lambda x, c: x.cast("double") * c)
-    return F.aggregate(prods, F.lit(0.0), lambda acc, x: acc + x)
-
-
 def _fetch_seed_vectors(
     emb: DataFrame, n: int, id_col: str, vec_col: str
 ) -> list[list[float]]:

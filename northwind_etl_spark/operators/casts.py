@@ -12,13 +12,8 @@ from __future__ import annotations
 
 from collections.abc import Mapping
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-
-def try_cast_col(col: str | Column, dtype: str) -> Column:
-    c = F.col(col) if isinstance(col, str) else col
-    return c.try_cast(dtype)
 
 
 def coerce_columns(df: DataFrame, casts: Mapping[str, str]) -> DataFrame:

@@ -34,11 +34,6 @@ from ..functions.texttools import shingles_from_tokens
 # -- exact ----------------------------------------------------------------
 
 
-def drop_duplicates(df: DataFrame, cols: list[str] | None = None) -> DataFrame:
-    """Plain dropDuplicates (keeps an arbitrary winner; cheap)."""
-    return df.dropDuplicates(cols)
-
-
 def dedup_exact(df: DataFrame, key_cols: list[str], id_col: str) -> DataFrame:
     """Deterministic exact dedup: keep MIN(id) per key group.
 

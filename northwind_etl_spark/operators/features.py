@@ -16,7 +16,7 @@ populations ambiguous.  Ranking over a TOTAL order (value, id) makes
 the bin assignment a pure function of the rank — bin sizes are exact
 to ±1 BY CONSTRUCTION, ties broken deterministically — and the rank
 itself comes from `ranking.global_row_number`: range-partition, sort
-WITHIN partitions, broadcast per-partition offsets.  No global
+WITHIN partitions, add per-partition offsets.  No global
 single-partition sort anywhere; the only driver state is the
 partition-count list.  This is ntile() semantics at scale (and the
 oracle replays it with literal NTILE-free ROW_NUMBER arithmetic).

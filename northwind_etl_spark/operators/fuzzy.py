@@ -192,12 +192,13 @@ def sorted_neighborhood_pairs(
       characters (the classic SNM tradeoff — multi-pass SNM with a
       second key ordering is the textbook fix, composable by union).
 
-    Scale shape: the ranking is `global_row_number`'s two-exchange
-    form (range exchange + per-partition local window — never
-    `Exchange SinglePartition`); candidates come from replicating each
-    ranked row `window` times (`explode(sequence(rk+1, rk+window))`)
-    into an equi-join on rank, so the shuffle carries n·window rows of
-    (rank, id, key) — no posting lists, no array blowup.  Returns
+    Scale shape: the ranking is `global_row_number`'s two-phase form
+    (one range exchange + a per-partition local sort and record
+    counter — never `Exchange SinglePartition`); candidates come from
+    replicating each ranked row `window` times
+    (`explode(sequence(rk+1, rk+window))`) into an equi-join on rank,
+    so the shuffle carries n·window rows of (rank, id, key) — no
+    posting lists, no array blowup.  Returns
     (id_a, id_b, jw) with id_a the lower-RANKED record (both engines
     derive the same assignment from the same total order).
     """

@@ -7,8 +7,9 @@ we provide two strategies with explicit scale contracts:
 
 - ``dense_keys``: dense 1..N in natural-key order, computed by the
   two-phase distributed ranking (operators/ranking.py::
-  global_row_number — range exchange + per-partition local window +
-  broadcast offsets).  Bit-identical to ``row_number() OVER (ORDER BY
+  global_row_number — range exchange, a per-partition local sort and
+  record counter, and per-partition offsets attached as one literal
+  array).  Bit-identical to ``row_number() OVER (ORDER BY
   natural_key)`` when the order is total (which a natural KEY is by
   definition), but with NO ``Exchange SinglePartition``: the original
   single-window form was this repo's one documented scale-limited

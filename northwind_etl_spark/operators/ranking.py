@@ -14,18 +14,21 @@ The fix is the classic two-phase shape (the DataFrame rendering of
 1. ``repartitionByRange`` on the order keys — a range exchange whose
    bounds come from a distributed sample, so partition i holds keys
    strictly before partition i+1 (unique total order ⇒ well-defined);
-2. per-partition LOCAL ranking — a window partitioned by
-   ``spark_partition_id()`` (captured before the window's own
-   exchange, so membership is the range partition, wherever the row
-   physically lands);
+2. per-partition LOCAL ranking inside the persisted stage —
+   ``sortWithinPartitions`` on the order keys, then the low 33 bits of
+   ``monotonically_increasing_id`` (its per-partition record counter);
+   no window, so no second exchange on the partition id;
 3. per-partition counts — P rows, driver-sized by construction —
-   broadcast back as cumulative offsets; global rank = offset + local
-   rank.
+   turned into cumulative offsets and attached as ONE ``array<bigint>``
+   literal indexed by the captured ``spark_partition_id``; global rank
+   = local rank + offset.
 
 The result is bit-identical to the single-window form when the order
-is total (pinned in tests/test_ranking.py), costs two exchanges of
-which neither is SinglePartition, and the only driver-side data is the
-P-row count list.
+is total (pinned in tests/test_ranking.py), costs one range exchange
+and no SinglePartition, and the only driver-side data is the P-row
+count list.  No join attaches the offsets: a ``createDataFrame`` offset
+relation is a Python RDD scan, and every action on the result would
+run an extra job for it.
 
 North-star use: stable vocabulary ids for tokenizer export
 (`term_vocabulary_ids`), global sort positions for deterministic
@@ -37,6 +40,24 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+
+from ..functions.arrays import lit_long_array
+
+# monotonically_increasing_id = partition index << 33 | record number
+_RECORD_BITS = (1 << 33) - 1
+
+
+def _offsets_by_pid(per_pid: list[tuple[int, int]]) -> Column:
+    """The exclusive prefix sums of the (pid, n) pairs (pid ascending)
+    as an array<bigint> literal, read at each row's own ``__pid``:
+    partitions absent from the list hold no rows, so their slot is
+    never read."""
+    offsets = [0] * (max((pid for pid, _ in per_pid), default=0) + 1)
+    running = 0
+    for pid, n in per_pid:
+        offsets[pid] = running
+        running += n
+    return F.element_at(lit_long_array(offsets), F.col("__pid") + 1)
 
 
 def global_row_number(
@@ -55,42 +76,27 @@ def global_row_number(
     cols = [F.col(c) if isinstance(c, str) else c for c in order_cols]
     p = partitions or df.sparkSession.sparkContext.defaultParallelism
     # persisted: the counts action and the ranking plan must see the
-    # SAME range split (and the range exchange runs once, not twice)
+    # SAME range split and local numbering (the range exchange runs
+    # once, and the nondeterministic record counter is fixed)
     ranged = persist_stage(
-        df.repartitionByRange(p, *cols).withColumn(
-            "__pid", F.spark_partition_id()
+        df.repartitionByRange(p, *cols)
+        .sortWithinPartitions(*cols)
+        .withColumn("__pid", F.spark_partition_id())
+        .withColumn(
+            "__local",
+            F.monotonically_increasing_id().bitwiseAND(F.lit(_RECORD_BITS)) + 1,
         )
     )
-    local = F.row_number().over(Window.partitionBy("__pid").orderBy(*cols))
-    ranked = ranged.withColumn("__local", local)
     counts = (
         ranged.groupBy("__pid")
         .agg(F.count(F.lit(1)).alias("__n"))
         .orderBy("__pid")
         .collect()
     )
-    offset = 0
-    offsets = []
-    for r in counts:
-        offsets.append((r["__pid"], offset))
-        offset += r["__n"]
-    spark = df.sparkSession
-    # offsets attach via a broadcast join on __pid — O(1) per row; a
-    # CASE chain would be O(P) comparisons per row and a P-ary codegen
-    # expression tree, both of which blow up at cluster parallelism
-    off_df = spark.createDataFrame(
-        offsets or [(0, 0)], "__pid int, __off long"
-    )
-    return (
-        ranked.join(F.broadcast(off_df), "__pid", "left")
-        .withColumn(
-            rank_col,
-            (F.col("__local") + F.coalesce(F.col("__off"), F.lit(0))).cast(
-                "long"
-            ),
-        )
-        .drop("__pid", "__local", "__off")
-    )
+    offset = _offsets_by_pid([(r["__pid"], r["__n"]) for r in counts])
+    return ranged.withColumn(
+        rank_col, (F.col("__local") + offset).cast("long")
+    ).drop("__pid", "__local")
 
 
 def global_running_sum(
@@ -104,10 +110,11 @@ def global_running_sum(
     """Append the INCLUSIVE prefix sum of `value_col` following
     `order_cols` (a TOTAL order — same contract as global_row_number)
     WITHOUT a single-partition window: range-partition on the order,
-    local cumulative window per partition, then one bounded collect of
-    per-partition totals whose exclusive prefix becomes a broadcast
-    offset.  Driver state is P rows — the two-phase ranking pattern
-    extended from ranks to sums (rank = prefix sum of 1).
+    local cumulative window per partition (computed once, inside the
+    persisted stage), then one bounded collect of per-partition totals
+    whose exclusive prefix becomes a literal offset array.  Driver
+    state is P rows — the two-phase ranking pattern extended from
+    ranks to sums (rank = prefix sum of 1).
 
     `value_col` must be an INTEGRAL type: the per-partition offsets
     travel as BIGINTs, so a decimal/float column would be silently
@@ -126,15 +133,15 @@ def global_running_sum(
         )
     cols = [F.col(c) if isinstance(c, str) else c for c in order_cols]
     p = partitions or df.sparkSession.sparkContext.defaultParallelism
-    ranged = persist_stage(
-        df.repartitionByRange(p, *cols).withColumn(
-            "__pid", F.spark_partition_id()
-        )
-    )
     local = F.sum(value_col).over(
         Window.partitionBy("__pid")
         .orderBy(*cols)
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    )
+    ranged = persist_stage(
+        df.repartitionByRange(p, *cols)
+        .withColumn("__pid", F.spark_partition_id())
+        .withColumn("__local", local)
     )
     totals = (
         ranged.groupBy("__pid")
@@ -142,23 +149,7 @@ def global_running_sum(
         .orderBy("__pid")
         .collect()
     )
-    offset = 0
-    offsets = []
-    for r in totals:
-        offsets.append((r["__pid"], offset))
-        offset += r["__s"]
-    off_df = df.sparkSession.createDataFrame(
-        offsets or [(0, 0)], "__pid int, __off long"
-    )
-    return (
-        ranged.withColumn("__local", local)
-        .join(F.broadcast(off_df), "__pid", "left")
-        .withColumn(
-            out_col,
-            (
-                F.col("__local").cast("long")
-                + F.coalesce(F.col("__off"), F.lit(0))
-            ).cast("long"),
-        )
-        .drop("__pid", "__local", "__off")
-    )
+    offset = _offsets_by_pid([(r["__pid"], r["__s"] or 0) for r in totals])
+    return ranged.withColumn(
+        out_col, (F.col("__local").cast("long") + offset).cast("long")
+    ).drop("__pid", "__local")

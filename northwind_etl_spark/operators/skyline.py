@@ -16,9 +16,10 @@ sort-based 2D algorithm:
    order, computed without a single-task global window by the
    global_row_number discipline: ``repartitionByRange`` on x desc,
    per-partition local prefix max (window keyed by the captured
-   ``spark_partition_id``), then the P per-partition maxima (collected
-   — P values, driver-sized by construction) re-broadcast as
-   prior-partition prefixes;
+   ``spark_partition_id``, computed once inside the persisted stage),
+   then the P per-partition maxima (collected — P values, driver-sized
+   by construction) attached back as one literal array of
+   prior-partition prefixes indexed by the partition id;
 3. join the surviving (x, ymax) frontier keys back to the input and
    keep rows with y == ymax(x) — exact-value equality, no float
    arithmetic anywhere (comparisons stay in the input's own type:
@@ -67,48 +68,39 @@ def skyline_2d(
     ym = base.groupBy(x_col).agg(F.max(y_col).alias("__ymax"))
 
     p = partitions or spark.sparkContext.defaultParallelism
-    ranged = persist_stage(
-        ym.repartitionByRange(p, x.desc()).withColumn(
-            "__pid", F.spark_partition_id()
-        )
-    )
     # local prefix max over strictly-larger x within the partition
     w = (
         Window.partitionBy("__pid")
         .orderBy(x.desc())
         .rowsBetween(Window.unboundedPreceding, -1)
     )
-    local = ranged.withColumn("__lpref", F.max("__ymax").over(w))
+    ranged = persist_stage(
+        ym.repartitionByRange(p, x.desc())
+        .withColumn("__pid", F.spark_partition_id())
+        .withColumn("__lpref", F.max("__ymax").over(w))
+    )
     # prior-partition prefix maxima: P rows, driver-sized by
-    # construction (the range exchange made pid order = x-desc order)
+    # construction (the range exchange made pid order = x-desc order).
+    # They travel as strings and are cast back in the literal: Spark's
+    # string form of a value casts back to the same value for every
+    # orderable atomic type, with no Python-side type conversion.
+    before = Window.orderBy("__pid").rowsBetween(Window.unboundedPreceding, -1)
     per_pid = (
         ranged.groupBy("__pid")
         .agg(F.max("__ymax").alias("__pmax"))
-        .orderBy("__pid")
+        .select("__pid", F.max("__pmax").over(before).cast("string").alias("__p"))
         .collect()
     )
-    prior_rows, running = [], None
+    ytype = ym.schema["__ymax"].dataType
+    prior = [None] * (max((r["__pid"] for r in per_pid), default=0) + 1)
     for r in per_pid:
-        prior_rows.append((r["__pid"], running))
-        running = r["__pmax"] if running is None else max(running, r["__pmax"])
-    from pyspark.sql.types import IntegerType, StructField, StructType
-
-    prior_df = spark.createDataFrame(
-        prior_rows or [(0, None)],
-        StructType(
-            [
-                StructField("__pid", IntegerType()),
-                StructField("__prior", ym.schema["__ymax"].dataType),
-            ]
-        ),
+        prior[r["__pid"]] = r["__p"]
+    prior_col = F.element_at(
+        F.array(*[F.lit(v).cast(ytype) for v in prior]), F.col("__pid") + 1
     )
     ymax = F.col("__ymax")
-    frontier = (
-        local.join(F.broadcast(prior_df), "__pid", "left")
-        .where(
-            (F.col("__lpref").isNull() | (ymax > F.col("__lpref")))
-            & (F.col("__prior").isNull() | (ymax > F.col("__prior")))
-        )
-        .select(x_col, "__ymax")
-    )
+    frontier = ranged.where(
+        (F.col("__lpref").isNull() | (ymax > F.col("__lpref")))
+        & (prior_col.isNull() | (ymax > prior_col))
+    ).select(x_col, "__ymax")
     return base.join(frontier, x_col).where(y == F.col("__ymax")).drop("__ymax")

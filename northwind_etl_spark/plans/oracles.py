@@ -2030,7 +2030,7 @@ ORACLES: dict[str, str] = {
     # row_number over the identical (name, id) total order, candidates
     # = rank distance <= 5, DuckDB's NATIVE jaro_winkler_similarity as
     # the verifier — cross-engine on both the distributed ranking
-    # (global_row_number's two-exchange form ≡ the single window) and
+    # (global_row_number's two-phase range form ≡ the single window) and
     # the string metric.
     "sorted_neighborhood_part_pairs": """
         WITH base AS (

@@ -22,7 +22,7 @@ from pyspark.sql import functions as F
 
 from ..operators.quality import is_empty
 from ..sources.files import write_reload
-from ..sources.parquet import read_table
+from ..sources.parquet import read_parquet, read_table
 from . import star
 
 
@@ -43,32 +43,40 @@ def run_star_pipeline(
     sinks (L1/L2) and the reference's verification checks."""
     report = PipelineReport()
 
-    # --- dimension loads (etl_category.py / etl_product.py lifecycles)
+    # --- dimension loads (etl_category.py / etl_product.py lifecycles);
+    # read-backs pass the written frame's schema: no inference job
+    loaded: dict[str, DataFrame] = {}
     for name, builder in [("dim_category", star.dim_category), ("dim_part", star.dim_part)]:
         df = builder(spark, sf_dir)
         if is_empty(df):  # V2 guard
             report.invariants[f"{name}_nonempty"] = False
             continue
         write_reload(df, f"{out_dir}/{name}")
-        report.loaded[name] = spark.read.parquet(f"{out_dir}/{name}").count()
+        loaded[name] = read_parquet(spark, f"{out_dir}/{name}", schema=df.schema)
+        report.loaded[name] = loaded[name].count()
         report.invariants[f"{name}_nonempty"] = True
 
     # --- fact load (etl_orders.py lifecycle) against the *loaded* dim
-    dim_loaded = spark.read.parquet(f"{out_dir}/dim_part")
+    dim_loaded = loaded.get("dim_part")
+    if dim_loaded is None:  # nothing loaded: the lookup reads what is there
+        dim_loaded = spark.read.parquet(f"{out_dir}/dim_part")
     fact = star.fact_order_metrics(spark, sf_dir, dim=dim_loaded)
     if is_empty(fact):
         report.invariants["fact_nonempty"] = False
         return report
     report.invariants["fact_nonempty"] = True
     write_reload(fact, f"{out_dir}/fact_order_metrics")
-    fact_loaded = spark.read.parquet(f"{out_dir}/fact_order_metrics")
-    report.loaded["fact_order_metrics"] = fact_loaded.count()
+    fact_loaded = read_parquet(
+        spark, f"{out_dir}/fact_order_metrics", schema=fact.schema
+    )
+    # row count and null-key audit in one pass over the loaded fact
+    n_rows, n_null = fact_loaded.agg(
+        F.count(F.lit(1)), F.count(F.when(F.col("PartKey").isNull(), 1))
+    ).first()
+    report.loaded["fact_order_metrics"] = n_rows
 
     # --- post-load invariants (Project Plan6.md:155-159, Plan7.md:3-8)
     lineitem_n = read_table(spark, sf_dir, "lineitem").count()
-    report.invariants["rowcount_conserved"] = (
-        report.loaded["fact_order_metrics"] == lineitem_n
-    )
-    n_null = fact_loaded.where(F.col("PartKey").isNull()).count()
+    report.invariants["rowcount_conserved"] = n_rows == lineitem_n
     report.invariants["zero_null_keys"] = n_null == 0
     return report

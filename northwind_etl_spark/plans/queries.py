@@ -28,7 +28,7 @@ from ..operators.aggregate import table_count
 from ..operators.derive import revenue_expr
 from ..operators.joins import anti_join_audit
 from ..operators.sort import top_k
-from ..sources.parquet import TABLE_NAMES, read_table
+from ..sources.parquet import TABLE_NAMES, read_parquet, read_table
 from . import star
 from . import tpch as T
 
@@ -1194,7 +1194,7 @@ def sorted_neighborhood_part_pairs(
     sorted_neighborhood_pairs) over the same DISTINCT part-name
     dictionary as jaro_winkler_part_pairs — the complementary blocking
     paradigm: rank by the normalized name (global_row_number's
-    two-exchange form, never a single-task window), candidates are the
+    two-phase range form, never a single-task window), candidates are the
     exactly n·window pairs within 5 ranks (data-independent cost — no
     hot-gram mode exists), verified at jw >= 0.85 with the verifier
     pinned bit-identical to DuckDB's native jaro_winkler_similarity.
@@ -1602,7 +1602,8 @@ def _drain_stream(
     # see adaptive_stream_partitions for the full contract).  The
     # source may be a single file OR a directory-layout dataset
     # (ADVICE r12) — source_parquet_bytes handles both; a missing
-    # source keeps the session default (None).
+    # source keeps the session default (None), except for the
+    # python-stateful floor below.
     n_parts = None
     if sf_dir is not None:
         src_bytes = source_parquet_bytes(
@@ -1610,15 +1611,16 @@ def _drain_stream(
         )
         if src_bytes is not None:
             n_parts = adaptive_stream_partitions(src_bytes)
-        if n_parts is not None and python_stateful:
-            # applyInPandasWithState-style operators run their groups
-            # serially per partition inside the Python worker: their
-            # latency is per-key compute, so the partition count must
-            # never drop below the session's actual parallelism (at
-            # scale the byte-derived term dominates anyway)
-            n_parts = max(
-                n_parts, df.sparkSession.sparkContext.defaultParallelism
-            )
+    if python_stateful:
+        # applyInPandasWithState-style operators run their groups
+        # serially per partition inside the Python worker: their
+        # latency is per-key compute, so the partition count must
+        # never drop below the session's actual parallelism — also
+        # when the source size is unknown (at scale the byte-derived
+        # term dominates anyway)
+        n_parts = max(
+            n_parts or 1, df.sparkSession.sparkContext.defaultParallelism
+        )
     name = f"{base_name}_{next(_STREAM_SINK_SEQ)}"
     out = run_available_now(
         df, name, output_mode=output_mode, shuffle_partitions=n_parts
@@ -1627,7 +1629,7 @@ def _drain_stream(
     spill = _spill_dir(base_name)
     out.write.mode("overwrite").parquet(spill)
     spark.catalog.dropTempView(name)
-    return spark.read.parquet(spill)
+    return read_parquet(spark, spill, schema=out.schema)
 
 
 def stream_tumbling_event_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1975,7 +1977,7 @@ def term_vocabulary_ids(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stable dense vocabulary ids for tokenizer export
     (operators/ranking.py::global_row_number): every corpus term
     numbered 1..|V| by (count desc, term) WITHOUT the single-task
-    global window — range partition + local rank + broadcast offsets.
+    global window — range partition + local rank + literal offsets.
     The oracle runs the plain global row_number the two-phase form
     provably equals under a total order."""
     from ..operators.ranking import global_row_number
@@ -3972,7 +3974,7 @@ def order_price_decile_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Equal-frequency discretization (operators/features.py::
     quantile_bin_summary): o_totalprice split into 10 exact deciles
     under the total order (price, orderkey) — bin = (rank-1)*10 DIV n,
-    rank from the range-partition + local-sort + offset-broadcast
+    rank from the range-partition + local-sort + per-partition-offset
     global ranking, so bin populations are exact to +-1 with NO global
     single-partition sort.  Output is the 10-row discretization table
     (count, lo, hi per bin); the oracle replays the identical

@@ -15,8 +15,9 @@ The reference's inter-job ordering (dims before facts,
 plain script order there.  Each builder is a *plan*, not a load — callers
 write with sources.files.write_reload to get L1/L2 semantics.
 
-Scale: dims use dense_keys (single-partition sort — fine at dim scale,
-see operators/keys.py); the fact build never shuffles the fact table at
+Scale: dims use dense_keys (the two-phase distributed ranking: one
+range exchange, no single-partition sort — see operators/keys.py);
+the fact build never shuffles the fact table at
 all — J1 shuffles on the join key only if AQE declines to broadcast
 `orders`, and J2 is an explicit broadcast.
 """

@@ -2,8 +2,13 @@
 
 The reference declares every target schema by hand in T-SQL DDL
 (``Project Plan2.md:36-42``, ``Project Plan5.md:224-250``); we mirror
-that discipline with a StructType registry so reads never depend on
-inference and writes are schema-checked.  Type mapping per SURVEY.md
+that discipline with a StructType registry: source reads are checked
+against it (sources/parquet.py::_validate, column names) and writes are
+schema-checked.  Reads still infer the parquet schema, once per file
+version: sources/parquet.py::read_parquet runs Spark's inference on the
+first read of a source file (and again after it is rewritten) and
+reuses that schema afterwards; reads of data the engine has just
+written pass the written schema and never infer.  Type mapping per SURVEY.md
 §1.2 (MONEY→Decimal(19,4) at sinks, computed in double in-flight;
 IDENTITY→row_number surrogate keys, see operators/keys.py).
 """

@@ -14,8 +14,11 @@ whole directories — the read path here is unchanged.
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from ..session import harden
 
@@ -54,8 +57,6 @@ _cache: dict[tuple[str, str, str], DataFrame] = {}
 
 
 def _cache_enabled() -> bool:
-    import os
-
     return os.environ.get("SPARK_GRAFT_CACHE_TABLES", "0") == "1"
 
 
@@ -76,10 +77,63 @@ def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return _read_table_raw(spark, sf_dir, name)
 
 
+# Parquet schema inference is a Spark job (a footer read on the
+# executors), ~80 ms warm — paid on EVERY spark.read.parquet without a
+# schema.  Source tables are re-read by every query, so the schema Spark
+# inferred once is reused for as long as the files are unchanged.  Key:
+# the path, (name, size, mtime) of the file or of every data file of a
+# directory layout, and the nanosAsLong conf (it changes the inferred
+# type of TIMESTAMP(NANOS) columns).  A rewritten file has a new key and
+# is inferred afresh.
+_SCHEMAS: dict[tuple, StructType] = {}
+
+
+def _file_version(spark: SparkSession, path: str) -> tuple | None:
+    files = [path]
+    if os.path.isdir(path):
+        files = []
+        for root, dirs, names in os.walk(path):
+            dirs[:] = sorted(d for d in dirs if not d.startswith((".", "_")))
+            files += [
+                os.path.join(root, f)
+                for f in sorted(names)
+                if not f.startswith((".", "_"))
+            ]
+    stats = []
+    try:
+        for f in files:
+            st = os.stat(f)
+            stats.append((f, st.st_size, st.st_mtime_ns))
+    except OSError:  # not a local path, or racing a rewrite: always infer
+        return None
+    nanos = spark.conf.get("spark.sql.legacy.parquet.nanosAsLong", "false")
+    return (path, tuple(stats), nanos)
+
+
+def read_parquet(
+    spark: SparkSession, path: str, schema: StructType | None = None
+) -> DataFrame:
+    """``spark.read.parquet(path)`` without a schema-inference job where
+    the schema is known: given `schema` (data the caller just wrote), it
+    is used as is; otherwise the schema inferred for the same file
+    version earlier in the process is reused, and only a file version
+    not seen before is inferred."""
+    if schema is not None:
+        return spark.read.schema(schema).parquet(path)
+    key = _file_version(spark, path)
+    known = _SCHEMAS.get(key) if key is not None else None
+    if known is not None:
+        return spark.read.schema(known).parquet(path)
+    df = spark.read.parquet(path)
+    if key is not None:
+        _SCHEMAS[key] = df.schema
+    return df
+
+
 def _read_table_raw(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name == "events":
         return read_events(spark, sf_dir)
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    df = read_parquet(spark, f"{sf_dir}/{name}.parquet")
     _validate(name, df)
     return df
 
@@ -97,7 +151,7 @@ def _validate(name: str, df: DataFrame) -> None:
 def read_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """events with `ts` as TIMESTAMP_NTZ (µs), exactly as DuckDB reads it."""
     harden(spark)
-    raw = spark.read.parquet(f"{sf_dir}/events.parquet")
+    raw = read_parquet(spark, f"{sf_dir}/events.parquet")
     if dict(raw.dtypes)["ts"] in ("bigint", "long"):
         raw = raw.withColumn("ts", F.expr(_NS_TO_NTZ))
     return raw

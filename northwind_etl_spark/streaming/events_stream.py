@@ -29,7 +29,7 @@ from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from ..schemas import EVENTS_RAW
 from ..session import harden
-from ..sources.parquet import _NS_TO_NTZ
+from ..sources.parquet import _NS_TO_NTZ, read_parquet
 
 
 def _events_stream_dir(sf_dir: str) -> str:
@@ -76,7 +76,7 @@ def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     and lands every event in Jan 1970.
     """
     harden(spark)
-    probe = spark.read.parquet(os.path.join(sf_dir, "events.parquet"))
+    probe = read_parquet(spark, os.path.join(sf_dir, "events.parquet"))
     ts_is_raw_ns = dict(probe.dtypes)["ts"] in ("bigint", "long")
     schema = EVENTS_RAW if ts_is_raw_ns else probe.schema
     raw = (

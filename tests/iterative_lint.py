@@ -51,9 +51,7 @@ def _parquet_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).limit(500)
 
 
-def lint_iterative_operators(
-    spark: SparkSession, sf_dir: str = "/root/testdata/sf0.001"
-) -> list[str]:
+def lint_iterative_operators(spark: SparkSession, sf_dir: str) -> list[str]:
     """Returns a list of failure strings — empty means every linted
     iterative operator's uncached-scan count is iteration-invariant."""
     from northwind_etl_spark.operators.graph import (

@@ -25,6 +25,26 @@ def test_star_pipeline_end_to_end(spark, sf_dir):
     assert dim.where(F.col("PartKey").isNull()).count() == 0
 
 
+# A warm load ran 43 Spark jobs before the rank offsets became a literal
+# (no Python-RDD scan per action) and the read-backs stopped inferring
+# their schema; it runs 26 now.  The margin absorbs planner noise, not a
+# reintroduced per-action job.
+WARM_PIPELINE_MAX_JOBS = 30
+
+
+def test_warm_star_pipeline_job_count(spark, sf_dir, tmp_path):
+    sc = spark.sparkContext
+    run_star_pipeline(spark, sf_dir, str(tmp_path / "warm"))
+    sc.setJobGroup("warm_star_pipeline", "job-count bound")
+    try:
+        report = run_star_pipeline(spark, sf_dir, str(tmp_path / "out"))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert report.ok, report.invariants
+    jobs = sc.statusTracker().getJobIdsForGroup("warm_star_pipeline")
+    assert 0 < len(jobs) <= WARM_PIPELINE_MAX_JOBS, len(jobs)
+
+
 def test_salted_join_matches_plain_join(spark, sf_dir):
     li = spark.read.parquet(f"{sf_dir}/lineitem.parquet").select(
         "l_orderkey", "l_quantity"

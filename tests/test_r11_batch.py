@@ -304,10 +304,10 @@ def test_largest_remainder_proportional_on_exact_split(spark):
     assert all(v["extra"] == 0 for v in out.values())
 
 
-def test_license_token_budget_excludes_blocked(spark):
+def test_license_token_budget_excludes_blocked(spark, sf_dir):
     from northwind_etl_spark.plans.queries import license_token_budget
 
-    out = license_token_budget(spark, "/root/testdata/sf0.001").collect()
+    out = license_token_budget(spark, sf_dir).collect()
     classes = {r["license"] for r in out}
     assert "noai" not in classes and "all-rights-reserved" not in classes
     total = sum(r["weight"] for r in out)
@@ -318,20 +318,20 @@ def test_license_token_budget_excludes_blocked(spark):
 # --------------------------------------------------- measured quality
 
 
-def test_rp_lsh_recall_high_on_planted_twins(spark):
+def test_rp_lsh_recall_high_on_planted_twins(spark, sf_dir):
     from northwind_etl_spark.plans.queries import rp_lsh_recall_eval
 
-    r = rp_lsh_recall_eval(spark, "/root/testdata/sf0.001").collect()[0]
+    r = rp_lsh_recall_eval(spark, sf_dir).collect()[0]
     # a 1e-3 nudge on one of 64 dims almost never flips a sign bit
     assert r["n_true_pairs"] > 0
     assert r["recall"] >= 0.9, r
     assert 0.0 <= r["precision"] <= 1.0
 
 
-def test_kll_eval_within_tolerance_and_err_consistent(spark):
+def test_kll_eval_within_tolerance_and_err_consistent(spark, sf_dir):
     from northwind_etl_spark.plans.queries import kll_quantile_error_eval
 
-    rows = kll_quantile_error_eval(spark, "/root/testdata/sf0.001").collect()
+    rows = kll_quantile_error_eval(spark, sf_dir).collect()
     assert len(rows) == 20  # 5 priorities x 4 quantiles
     for r in rows:
         assert r["within_tol"] == (r["rank_err_pct"] <= 5.0)

@@ -175,12 +175,10 @@ def test_lpm_duplicate_prefix_conflict_prefers_allow(spark):
 # ----------------------------------- band recall: two operating points
 
 
-def test_band_recall_eval_two_taus(spark):
+def test_band_recall_eval_two_taus(spark, sf_dir):
     from northwind_etl_spark.plans.queries import QUERIES
 
-    rows = QUERIES["minhash_band_recall_eval"](
-        spark, "/root/testdata/sf0.001"
-    ).collect()
+    rows = QUERIES["minhash_band_recall_eval"](spark, sf_dir).collect()
     taus = [r["tau"] for r in rows]
     assert taus == [0.5, 0.8]
     by_tau = {r["tau"]: r for r in rows}

@@ -9,8 +9,6 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-SF = "/root/testdata/sf0.001"
-
 
 def _docs_df(spark, texts):
     return spark.createDataFrame(

@@ -104,7 +104,7 @@ def test_source_parquet_bytes_file_dir_missing(tmp_path):
     assert source_parquet_bytes(str(tmp_path / "absent.parquet")) is None
 
 
-def test_stream_reads_directory_layout_source(spark, tmp_path):
+def test_stream_reads_directory_layout_source(spark, sf_dir, tmp_path):
     """A DIRECTORY-layout events.parquet must stream the same rows as
     the single-file fixture (the first r13 scale-lane run drained 0
     rows: the symlink watch-dir made the file source see a
@@ -113,18 +113,17 @@ def test_stream_reads_directory_layout_source(spark, tmp_path):
 
     from northwind_etl_spark.plans.queries import stream_tumbling_event_counts
 
-    src = "/root/testdata/sf0.001"
-    sf_dir = tmp_path / "sfdir"
-    evdir = sf_dir / "events.parquet"
+    copy_dir = tmp_path / "sfdir"
+    evdir = copy_dir / "events.parquet"
     evdir.mkdir(parents=True)
-    shutil.copy(f"{src}/events.parquet", evdir / "part-00000.parquet")
+    shutil.copy(f"{sf_dir}/events.parquet", evdir / "part-00000.parquet")
     (evdir / "_SUCCESS").write_bytes(b"")
 
     got = sorted(
-        tuple(r) for r in stream_tumbling_event_counts(spark, str(sf_dir)).collect()
+        tuple(r) for r in stream_tumbling_event_counts(spark, str(copy_dir)).collect()
     )
     want = sorted(
-        tuple(r) for r in stream_tumbling_event_counts(spark, src).collect()
+        tuple(r) for r in stream_tumbling_event_counts(spark, sf_dir).collect()
     )
     assert got == want and len(got) > 0
 

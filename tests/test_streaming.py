@@ -332,3 +332,28 @@ def test_two_level_window_stream_multi_batch_equals_batch(spark, sf_dir):
     )
     assert got.exceptAll(want).count() == 0
     assert want.exceptAll(got).count() == 0
+
+
+def test_python_stateful_drain_floor_without_source_size(
+    spark, tmp_path, monkeypatch
+):
+    """A source whose size cannot be read still gets the python-stateful
+    partition floor (the session's parallelism), not the session-default
+    shuffle partition count; other drains keep the session default."""
+    from northwind_etl_spark.plans import queries as Q
+
+    seen = []
+
+    def drain(df, name, *, output_mode, shuffle_partitions):
+        seen.append(shuffle_partitions)
+        return spark.range(3)
+
+    monkeypatch.setattr(ES, "run_available_now", drain)
+    missing = str(tmp_path / "no_such_sf")
+    assert ES.source_parquet_bytes(f"{missing}/events.parquet") is None
+    out = Q._drain_stream(
+        spark.range(1), "floor", sf_dir=missing, python_stateful=True
+    )
+    assert out.count() == 3
+    Q._drain_stream(spark.range(1), "floor", sf_dir=missing)
+    assert seen == [spark.sparkContext.defaultParallelism, None]
