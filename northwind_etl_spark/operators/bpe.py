@@ -86,23 +86,26 @@ def _pair_counts(types_df: DataFrame) -> DataFrame:
 
 
 def _sql_str(s: str) -> str:
-    """Escape a Python string as a Spark SQL single-quoted literal
-    body (backslash escaping — the parser default)."""
-    return s.replace("\\", "\\\\").replace("'", "\\'")
+    """A Spark SQL expression for the string `s` that parses the same
+    under either `spark.sql.parser.escapedStringLiterals` setting: its
+    UTF-8 bytes as a hex binary literal, cast back to string (the
+    optimizer folds it to a plain literal).  A quoted literal with
+    backslash escapes is read back verbatim when that conf is true."""
+    return f"CAST(X'{s.encode('utf-8').hex()}' AS STRING)"
 
 
 # The one-merge fold over a symbol array, as a SQL template (r13,
 # guide §1.2 / the pq playbook: the Column-API spelling cost ~15 py4j
 # round-trips per merge per call site; the parsed string is one).
-# {L}/{R}/{M} are escaped literals; {acc}/{x} are lambda variable
+# {L}/{R}/{M} are _sql_str expressions; {acc}/{x} are lambda variable
 # names the caller picks (nested folds need distinct names — Spark
 # resolves lambda variables by NAME, so a reused name in a nested
 # scope would shadow the outer binding).
 _MERGE_FOLD = (
     "aggregate({syms}, CAST(array() AS ARRAY<STRING>),"
     " ({acc}, {x}) -> CASE WHEN size({acc}) > 0"
-    " AND element_at({acc}, -1) = '{L}' AND {x} = '{R}'"
-    " THEN concat(slice({acc}, 1, size({acc}) - 1), array('{M}'))"
+    " AND element_at({acc}, -1) = {L} AND {x} = {R}"
+    " THEN concat(slice({acc}, 1, size({acc}) - 1), array({M}))"
     " ELSE concat({acc}, array({x})) END)"
 )
 
@@ -136,7 +139,7 @@ def _apply_all_merges_expr(merges: list[tuple[str, str]]) -> "F.Column":
     if not merges:
         return F.col("syms")
     merge_lits = ",".join(
-        f"named_struct('l', '{_sql_str(left)}', 'r', '{_sql_str(right)}')"
+        f"named_struct('l', {_sql_str(left)}, 'r', {_sql_str(right)})"
         for left, right in merges
     )
     # distinct lambda variable names per nesting level: Spark resolves
@@ -230,9 +233,6 @@ def encode_with_merges(
     merges: list[tuple[str, str]],
     text_col: str = "text",
     id_col: str = "doc_id",
-    *,
-    checkpoint_every: int = 5,  # kept for API compat; the one-fold
-    # encode has no chained lineage to truncate (r13)
 ) -> DataFrame:
     """Apply a learned merge list (rank order) and return per-doc
     encoded statistics: (id, n_words, n_symbols) where n_symbols is

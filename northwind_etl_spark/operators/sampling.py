@@ -152,7 +152,6 @@ def group_sample(
     id_col: str,
     *,
     k: int = 20,
-    salt_buckets: int = 8,  # kept for call compatibility; unused
 ) -> DataFrame:
     """Deterministic k-per-group sample — exactly min(k, |group|) rows
     per group, selected by ranking md5(id) (id tie-break), so the

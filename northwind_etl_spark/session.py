@@ -17,8 +17,19 @@ from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_SHUFFLE", "32"))
 
-# Engine confs shared by every deployment (local harness, spark-submit,
-# the driver's vanilla session via harden()).
+# Engine confs of every session get_spark builds (local harness,
+# spark-submit).  A session built elsewhere (the correctness driver's
+# vanilla one) gets only what harden() sets at runtime: AQE on, UTC,
+# nanosAsLong.  The AQE coalesce and skew-join switches are Spark's
+# defaults anyway; Arrow stays at the session's own setting there.
+# Static confs (fixed when the session is built) take effect only
+# through get_spark:
+# - spark.sql.codegen.cache.maxEntries: the generated-class LRU.  One
+#   steady cycle of either benchmark workload visits about 230 distinct
+#   classes in the same order, so Spark's default of 100 evicts every
+#   class before its reuse: a steady cycle recompiled 198-232 of them
+#   (CodegenMetrics count, 4-core host); at 1000 it compiles 2-12.  A
+#   vanilla session keeps the 100-entry cache.
 ENGINE_CONFS: dict[str, str] = {
     "spark.sql.adaptive.enabled": "true",
     "spark.sql.adaptive.coalescePartitions.enabled": "true",
@@ -26,6 +37,7 @@ ENGINE_CONFS: dict[str, str] = {
     "spark.sql.execution.arrow.pyspark.enabled": "true",
     "spark.sql.legacy.parquet.nanosAsLong": "true",
     "spark.sql.session.timeZone": "UTC",
+    "spark.sql.codegen.cache.maxEntries": "1000",
 }
 
 
@@ -96,6 +108,9 @@ def get_spark(
     - nanosAsLong: the events table carries parquet TIMESTAMP(NANOS)
       which Spark's vectorized reader rejects; we read it as raw int64
       and convert exactly (sources/parquet.py).
+    - codegen cache of 1000 classes: a rerun of the same queries reuses
+      the classes compiled before instead of compiling them again (see
+      ENGINE_CONFS).
     """
     if spec is not None:
         master = spec.master
@@ -121,6 +136,9 @@ def harden(spark: SparkSession) -> SparkSession:
     The correctness driver hands us *its* SparkSession; these settings make
     our queries behave identically there (UTC timestamps, nanos reading,
     AQE).  All of these are runtime SQL confs — safe to set post-start.
+    The static ENGINE_CONFS entry (the codegen cache size) cannot be
+    set here: Spark rejects a static conf on a running session, so the
+    driver's session keeps its own cache size.
     """
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark.conf.set("spark.sql.session.timeZone", "UTC")

@@ -152,8 +152,7 @@ def test_encode_with_merges_matches_reference_vocab(spark):
     )
     got = {
         r["doc_id"]: r["n_symbols"]
-        for r in encode_with_merges(df, pairs, "text", "doc_id",
-                                    checkpoint_every=3).collect()
+        for r in encode_with_merges(df, pairs, "text", "doc_id").collect()
     }
     assert got == want
     # intermediate checkpoint blocks are freed; only the tracked
@@ -163,3 +162,41 @@ def test_encode_with_merges_matches_reference_vocab(spark):
 
     release_stages()
     assert spark.sparkContext._jsc.sc().getPersistentRDDs().size() == 0
+
+
+def test_bpe_symbols_survive_escaped_string_literals(spark):
+    """Merge symbols reach the fold as SQL text; a quote or a backslash
+    in a symbol must mean the same thing whichever way the session's
+    parser reads string literals."""
+    from northwind_etl_spark.cache import release_stages
+    from northwind_etl_spark.operators.bpe import encode_with_merges
+
+    texts = ["o'b o'b o'b a\\b a\\b a\\b", "o'b a\\b"]
+    n = 4
+    want = _reference_bpe(texts, n, 2)
+    df = spark.createDataFrame(
+        [(i, t) for i, t in enumerate(texts)], ["doc_id", "text"]
+    )
+    conf = "spark.sql.parser.escapedStringLiterals"
+    orig = spark.conf.get(conf)
+    try:
+        spark.conf.set(conf, "true")
+        got = [
+            (r["rank"], r["left"], r["right"], r["merged"], r["pair_count"])
+            for r in learn_bpe_merges(df, "text", n_merges=n, min_freq=2)
+            .orderBy("rank")
+            .collect()
+        ]
+        encoded = {
+            r["doc_id"]: r["n_symbols"]
+            for r in encode_with_merges(
+                df, [(m[1], m[2]) for m in want], "text", "doc_id"
+            ).collect()
+        }
+    finally:
+        spark.conf.set(conf, orig)
+        release_stages()
+    assert got == want
+    # every word merges down to one symbol: "o'b" and "a\b" each take
+    # two of the four merges
+    assert encoded == {0: 6, 1: 2}

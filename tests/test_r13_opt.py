@@ -334,7 +334,7 @@ def test_simhash_md5_expr_rewrite(spark):
 def test_bpe_one_fold_encode_equals_chained(spark):
     """The r13 single nested-fold merge application must equal the
     chained per-merge folds — including tokens carrying SQL-hostile
-    characters (quotes, backslashes) through the escaped literals."""
+    characters (quotes, backslashes) through the SQL literals."""
     from northwind_etl_spark.operators.bpe import (
         _apply_all_merges_expr,
         _apply_merge,

@@ -84,3 +84,8 @@ def test_read_events_rehardens_hostile_session_confs(spark, sf_dir):
     finally:
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", orig_nanos)
         spark.conf.set("spark.sql.session.timeZone", orig_tz)
+
+
+def test_fixture_session_codegen_cache_size(spark):
+    # a static conf: only a session built by get_spark carries it
+    assert spark.conf.get("spark.sql.codegen.cache.maxEntries") == "1000"
