@@ -11,17 +11,17 @@ entry per plan indefinitely, since nothing ever unpersists them.
 
 ``persist_stage`` is a drop-in ``df.persist()`` that also registers the
 DataFrame here; ``release_stages()`` unpersists everything registered —
-call it between corpora in a multi-corpus session (or use the
-``stage_cache_scope`` context manager around a batch of queries).  The
-correctness path is unaffected: a released stage is recomputed, never
-wrong.
+call it between corpora in a multi-corpus session.  The correctness
+path is unaffected: a released stage is recomputed, never wrong.
+
+``checkpoint_stage`` is the one lineage truncation every iterative loop
+uses.  Checkpoints are not tracked: a freed checkpoint cannot be
+recomputed, so releasing one would break that contract.
 """
 
 from __future__ import annotations
 
 import threading
-from contextlib import contextmanager
-from typing import Iterator
 
 from pyspark.sql import DataFrame
 
@@ -47,21 +47,25 @@ def persist_stage(df: DataFrame) -> DataFrame:
     return df
 
 
+def checkpoint_stage(df: DataFrame, *, eager: bool = True) -> DataFrame:
+    """Truncate ``df``'s lineage: ``checkpoint`` to the session's
+    checkpoint dir if one is set, else ``localCheckpoint``.
+
+    Local checkpoint blocks live on one executor and cannot be
+    recomputed once the lineage is cut, so an executor loss fails the
+    job; a checkpoint dir on a fault-tolerant store (HDFS, object
+    store) trades one replicated write per checkpoint for surviving
+    it.  The dir is read at call time, so setting it is the only switch.
+    """
+    if df.sparkSession.sparkContext.getCheckpointDir() is not None:
+        return df.checkpoint(eager=eager)
+    return df.localCheckpoint(eager=eager)
+
+
 def _drain_all() -> list[DataFrame]:
     with _LOCK:
         drained = _TRACKED[:]
         _TRACKED.clear()
-    return drained
-
-
-def _drain_except(keep_ids: set[int]) -> list[DataFrame]:
-    """Remove and return every tracked entry NOT in the identity
-    snapshot.  Identity-based (not index-based) so a concurrent
-    release_stages() during a scope cannot shift positions and leak
-    in-scope entries."""
-    with _LOCK:
-        drained = [df for df in _TRACKED if id(df) not in keep_ids]
-        _TRACKED[:] = [df for df in _TRACKED if id(df) in keep_ids]
     return drained
 
 
@@ -83,27 +87,3 @@ def release_stages() -> int:
     callers don't wait on executor round-trips.
     """
     return _unpersist_all(_drain_all())
-
-
-@contextmanager
-def stage_cache_scope() -> Iterator[None]:
-    """Scope for a batch of queries over one corpus: stages persisted
-    inside are released on exit.  Stages persisted BEFORE entry are
-    left alone (identified by handle identity, so a concurrent
-    release_stages() during the scope cannot shift the boundary).
-    Concurrent persists from OTHER threads that land inside the scope
-    are treated as part of it (the registry is a process-wide resource;
-    per-thread scoping would leak entries)."""
-    with _LOCK:
-        # hold the HANDLES, not just ids: keeping the snapshot alive for
-        # the scope's duration pins their id()s, so a concurrently
-        # released-and-GC'd entry can't free an id that a new in-scope
-        # DataFrame then reuses (which would misclassify it as
-        # pre-existing and leak it)
-        entry_handles = list(_TRACKED)
-    entry_ids = {id(df) for df in entry_handles}
-    try:
-        yield
-    finally:
-        _unpersist_all(_drain_except(entry_ids))
-        del entry_handles

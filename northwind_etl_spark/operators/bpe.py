@@ -185,13 +185,15 @@ def learn_bpe_merges(
     (rank, left, right, merged, pair_count) in merge order.  Stops
     early when the best remaining pair's count drops below `min_freq`.
     """
+    from ..cache import checkpoint_stage
+
     spark = df.sparkSession
     sc = spark.sparkContext
     types_df = bpe_word_types(df, text_col).persist()
     types_df.count()  # materialize the one corpus pass
     merges: list[tuple[int, str, str, str, int]] = []
     current = types_df
-    # localCheckpoint blocks are NOT tracked by the SQL cache manager
+    # local checkpoint blocks are NOT tracked by the SQL cache manager
     # and outlive the call until async ContextCleaner GC — track their
     # RDD ids explicitly so (a) at most ONE checkpoint's blocks are
     # ever live (the superseded one is released as soon as its
@@ -214,7 +216,7 @@ def learn_bpe_merges(
         current = _apply_merge(current, left, right)
         if (rank + 1) % checkpoint_every == 0:
             before = _persistent_rdd_ids(sc)
-            current = current.localCheckpoint()  # eager: blocks exist now
+            current = checkpoint_stage(current)  # eager: blocks exist now
             new_ids = _persistent_rdd_ids(sc) - before
             _unpersist_rdd_ids(sc, ckpt_ids)
             ckpt_ids = new_ids
@@ -261,7 +263,7 @@ def encode_with_merges(
     from ..cache import persist_stage
 
     # land the vocab-sized word→symbol-count map in the TRACKED stage
-    # cache (caller releases via release_stages / stage_cache_scope);
+    # cache (caller releases via release_stages);
     # the returned plan reads the persisted map
     sym_counts = persist_stage(
         types_df.select(

@@ -185,7 +185,7 @@ def greedy_coverage_select(
     (round, doc_id, gain, covered_total) where gain is the round's
     marginal new-token count and covered_total the cumulative distinct
     tokens covered.  Deterministic: ties break to the smallest id."""
-    from ..cache import persist_stage
+    from ..cache import checkpoint_stage, persist_stage
     from ..functions.texttools import tokens_expr
 
     if k < 1:
@@ -198,7 +198,6 @@ def greedy_coverage_select(
         ).distinct()
     )
     covered: DataFrame | None = None
-    prev_stage = None
     rows = []
     covered_total = 0
     for rnd in range(1, k + 1):
@@ -221,13 +220,9 @@ def greedy_coverage_select(
         merged = (
             new_cov if covered is None else covered.union(new_cov)
         ).distinct()
-        # localCheckpoint bounds lineage across rounds (the
-        # duplicate_clusters discipline); persist so each round's
-        # anti-join reads materialized state, not a replay
-        stage = persist_stage(merged.localCheckpoint(eager=True))
-        if prev_stage is not None:
-            prev_stage.unpersist()
-        covered, prev_stage = stage, stage
+        # the eager checkpoint bounds lineage across rounds, and each
+        # round's anti-join reads its materialized blocks, not a replay
+        covered = checkpoint_stage(merged)
     return spark.createDataFrame(
         rows, "round INT, doc_id BIGINT, gain BIGINT, covered_total BIGINT"
     )

@@ -28,7 +28,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..cache import persist_stage
+from ..cache import checkpoint_stage, persist_stage
 from ..functions.texttools import shingles_from_tokens
 
 # -- exact ----------------------------------------------------------------
@@ -433,35 +433,7 @@ def simhash_near_duplicates(
     )
 
 
-def _materialize(df: DataFrame, reliable: bool) -> DataFrame:
-    """Per-pass lineage truncation for the iterative loop.
-
-    Default is localCheckpoint: executor-local blocks, no extra write —
-    the fast path, but those blocks are NOT recomputable once lineage
-    is truncated, so an executor loss mid-iteration fails the job.  On
-    a long cluster run where that trade is wrong, reliable=True uses a
-    real Dataset.checkpoint to the configured checkpoint dir (HDFS/
-    object store), which survives executor loss at the cost of a
-    replicated write per pass.
-    """
-    if not reliable:
-        return df.localCheckpoint()
-    sc = df.sparkSession.sparkContext
-    if sc.getCheckpointDir() is None:
-        raise ValueError(
-            "duplicate_clusters(reliable=True) needs a checkpoint dir: "
-            "call spark.sparkContext.setCheckpointDir('<fault-tolerant path>') first"
-        )
-    return df.checkpoint(eager=True)
-
-
-def duplicate_clusters(
-    pairs: DataFrame,
-    *,
-    max_iters: int = 10,
-    reliable: bool = False,
-    allow_partial: bool = False,
-) -> DataFrame:
+def duplicate_clusters(pairs: DataFrame, *, max_iters: int = 10) -> DataFrame:
     """Connected components over near-dup pairs → (doc, cluster) with
     cluster = min doc id reachable; the step that turns pairwise
     near-dup hits into a keep/drop decision (keep each cluster's min).
@@ -474,12 +446,11 @@ def duplicate_clusters(
     the per-component min.
 
     Scale contract per iteration:
-    - `labels` is checkpointed each pass (localCheckpoint by default;
-      reliable=True switches to Dataset.checkpoint — see _materialize
-      for the executor-loss trade-off), so pass k reads pass k−1's
-      materialized partitions instead of re-executing the whole
-      lineage (unbounded plan growth is the classic iterative-Spark
-      failure mode);
+    - `labels` is checkpointed each pass (cache.checkpoint_stage:
+      to the session's checkpoint dir if it has one, else local), so
+      pass k reads pass k−1's materialized partitions instead of
+      re-executing the whole lineage (unbounded plan growth is the
+      classic iterative-Spark failure mode);
     - the eager checkpoint IS the pass's one real job; the convergence
       probe (`changed` flag computed inside the same pass) then scans
       the already-materialized partitions — no recomputation;
@@ -491,23 +462,18 @@ def duplicate_clusters(
     under-delete at scale where component diameters grow): two members
     of one true cluster may carry different labels, so keep_canonical
     would keep both.  Raise max_iters (the diameter bound) in that
-    case — or pass allow_partial=True to accept the valid-but-partial
-    contraction with a warning (the old contract), for callers that
-    only need a refinement of the true components.  A normal return
-    therefore IS the convergence certificate — the entries built on
-    this operator (golden_customer_records, entity_resolution_clusters,
-    duplicate_cluster_sizes, the corpus pipeline) assert convergence
-    by construction.
+    case.  A normal return therefore IS the convergence certificate —
+    the entries built on this operator (golden_customer_records,
+    entity_resolution_clusters, duplicate_cluster_sizes, the corpus
+    pipeline) assert convergence by construction.
     """
-    import warnings
-
     # Both directions from ONE scan of `pairs` (r13, guide §2.3): the
     # union spelling evaluated the caller's pair pipeline — typically
     # the expensive blocked-candidates + verify chain — TWICE inside
     # the edges job (profiled ~5 s of golden_customer_records' 8.3 s
     # was this pre-loop).  explode(array(fwd, rev)) emits the same row
     # multiset from a single pass; distinct is unchanged.
-    edges = _materialize(
+    edges = checkpoint_stage(
         pairs.select(
             F.explode(
                 F.array(
@@ -521,14 +487,12 @@ def duplicate_clusters(
             ).alias("e")
         )
         .select("e.src", "e.dst")
-        .distinct(),
-        reliable,
+        .distinct()
     )
-    labels = _materialize(
+    labels = checkpoint_stage(
         edges.select(F.col("src").alias("id"))
         .distinct()
-        .withColumn("cluster", F.col("id")),
-        reliable,
+        .withColumn("cluster", F.col("id"))
     )
     # r13 optimization round: four restructurings of this loop were
     # implemented, MEASURED on the sf0.1 consumers, and reverted —
@@ -553,7 +517,6 @@ def duplicate_clusters(
     # The shipped loop is the measured optimum of the five: per pass
     # ONE neighbor-min aggregation + two label joins, one eager
     # checkpoint (the pass's job), one block-local convergence probe.
-    converged = False
     for _ in range(max_iters):
         neighbor_min = (
             edges.join(labels, edges.dst == labels.id)
@@ -586,25 +549,16 @@ def duplicate_clusters(
             )
         )
         # the pass's single job; truncates lineage
-        new_labels = _materialize(new_labels, reliable)
+        new_labels = checkpoint_stage(new_labels)
         # reads checkpointed partitions only — no recomputation
         changed = new_labels.where(F.col("__changed")).limit(1).count()
         labels = new_labels.drop("__changed")
         if changed == 0:
-            converged = True
-            break
-    if not converged:
-        msg = (
-            f"duplicate_clusters: labels still changing after {max_iters} "
-            "iterations — a cluster has diameter > max_iters; raise max_iters"
-        )
-        if not allow_partial:
-            raise RuntimeError(
-                msg + " (or pass allow_partial=True to accept a partial"
-                " contraction)"
-            )
-        warnings.warn(msg, RuntimeWarning, stacklevel=2)
-    return labels
+            return labels
+    raise RuntimeError(
+        f"duplicate_clusters: labels still changing after {max_iters} "
+        "iterations — a cluster has diameter > max_iters; raise max_iters"
+    )
 
 
 def keep_canonical(df: DataFrame, clusters: DataFrame, id_col: str) -> DataFrame:

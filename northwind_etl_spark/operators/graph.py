@@ -7,8 +7,8 @@ jobs at 100 TB:
 - **Iterative lineage.** PageRank is a loop of (join ranks⋈edges →
   groupBy dst) rounds; without checkpointing, round k's plan contains
   all k-1 predecessors and the scheduler DAG grows quadratically.
-  The loop here localCheckpoints every `checkpoint_every` rounds —
-  the duplicate_clusters discipline (operators/dedup.py).
+  The loop here checkpoints every `checkpoint_every` rounds
+  (`cache.checkpoint_stage`, the one truncation every loop uses).
 - **Wedge explosion.** Enumerating triangles from raw adjacency does
   Σ deg(v)² work; orienting every edge from its lower-(degree, id)
   endpoint to the higher one first bounds per-node fan-out by
@@ -60,7 +60,7 @@ def pagerank_fixed_point(
 
     Returns (node, rank) with rank a BIGINT in units of 1/scale.
     """
-    from ..cache import persist_stage
+    from ..cache import checkpoint_stage, persist_stage
 
     num, den = damping
     e = edges.select(
@@ -68,7 +68,7 @@ def pagerank_fixed_point(
     )
     # Everything loop-invariant is joined ONCE and materialized: the
     # edge list already carries its source's out-degree.  edges_od is
-    # localCheckpointed rather than persisted (r13): the loop joins it
+    # checkpointed rather than persisted (r13): the loop joins it
     # every round, and a persist dedupes execution but still re-embeds
     # the full upstream plan per round for Catalyst to re-analyze —
     # the checkpoint splices in a scan.  nodes is consumed exactly
@@ -80,7 +80,7 @@ def pagerank_fixed_point(
         .distinct()
     )
     outdeg = e.groupBy("src").agg(F.count(F.lit(1)).alias("od"))
-    edges_od = e.join(outdeg, "src").localCheckpoint(eager=False)
+    edges_od = checkpoint_stage(e.join(outdeg, "src"), eager=False)
 
     base = (scale * (den - num)) // den
     if iterations < 1:
@@ -118,7 +118,7 @@ def pagerank_fixed_point(
             .agg(F.sum(contrib).alias("m"))
         )
         if (i + 1) % checkpoint_every == 0 and i + 1 < iterations:
-            m = m.localCheckpoint(eager=True)
+            m = checkpoint_stage(m)
     return nodes.join(
         m.withColumnRenamed("node", "__mn"),
         F.col("node") == F.col("__mn"),
@@ -251,7 +251,7 @@ def bfs_hops(
     visited (first arrival IS the shortest hop count, since every
     level-d node is emitted before any level-d+1 node).  Rounds are
     bounded by the graph's diameter; each round's frontier is
-    localCheckpointed (it seeds the next join), and the visited union
+    checkpointed (it seeds the next join), and the visited union
     chain is compacted every `checkpoint_every` rounds — the
     duplicate_clusters lineage discipline.
 
@@ -262,16 +262,16 @@ def bfs_hops(
 
     Returns (node, hops) with hops an INT, source at hops=0.
     """
-    from ..cache import persist_stage
+    from ..cache import checkpoint_stage, persist_stage
 
     spark = edges.sparkSession
     e = persist_stage(
         edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
     )
-    frontier = (
-        spark.range(1)
-        .select(F.lit(source).alias("node"), F.lit(0).cast("int").alias("hops"))
-        .localCheckpoint(eager=True)
+    frontier = checkpoint_stage(
+        spark.range(1).select(
+            F.lit(source).alias("node"), F.lit(0).cast("int").alias("hops")
+        )
     )
     visited = frontier
     d = 0
@@ -285,14 +285,14 @@ def bfs_hops(
             .distinct()
             .withColumn("hops", F.lit(d).cast("int"))
         )
-        new = nxt.join(
-            visited.select("node"), "node", "left_anti"
-        ).localCheckpoint(eager=True)
+        new = checkpoint_stage(
+            nxt.join(visited.select("node"), "node", "left_anti")
+        )
         if new.isEmpty():
             break
         visited = visited.union(new)
         if d % checkpoint_every == 0:
-            visited = visited.localCheckpoint(eager=True)
+            visited = checkpoint_stage(visited)
         frontier = new
     return visited
 
@@ -315,7 +315,7 @@ def sssp_weighted(
 
     The dist relation is O(|V|) rows and is consumed TWICE per round
     (the fixed-point check and the next relax), so it is
-    localCheckpointed every round — unlike pagerank's every-k policy,
+    checkpointed every round — unlike pagerank's every-k policy,
     leaving it lazy here re-executes the whole inter-checkpoint chain
     once per consumer (measured 8 s → 2 s at sf0.001).
 
@@ -327,7 +327,7 @@ def sssp_weighted(
     a ≥diameter unroll equals the early-stopped loop).  Unreachable
     nodes are absent.  Returns (node, cost).
     """
-    from ..cache import persist_stage
+    from ..cache import checkpoint_stage, persist_stage
 
     spark = edges.sparkSession
     e = persist_stage(
@@ -337,10 +337,10 @@ def sssp_weighted(
             F.col(weight_col).cast("long").alias("w"),
         )
     )
-    dist = (
-        spark.range(1)
-        .select(F.lit(source).alias("node"), F.lit(0).cast("long").alias("cost"))
-        .localCheckpoint(eager=True)
+    dist = checkpoint_stage(
+        spark.range(1).select(
+            F.lit(source).alias("node"), F.lit(0).cast("long").alias("cost")
+        )
     )
     rounds = 0
     while True:
@@ -358,11 +358,8 @@ def sssp_weighted(
                 (F.col("__dc") + F.col("w")).alias("cost"),
             )
         )
-        new = (
-            dist.union(relax)
-            .groupBy("node")
-            .agg(F.min("cost").alias("cost"))
-            .localCheckpoint(eager=True)
+        new = checkpoint_stage(
+            dist.union(relax).groupBy("node").agg(F.min("cost").alias("cost"))
         )
         # fixed point: nothing improved and nothing newly reached
         improved = (
@@ -412,26 +409,24 @@ def label_propagation(
 
     Per round: one join on the label relation + the count/argmax
     aggregation pair fused on one shuffle, then a left join back for
-    isolated nodes; localCheckpoint every `checkpoint_every` rounds
+    isolated nodes; checkpoint every `checkpoint_every` rounds
     (the duplicate_clusters lineage discipline).  At 100 TB each
     round is keyed shuffles of the label/count relations (O(|V|) and
     O(|V|·labels-seen) rows) against the edge relation; skew follows
     in-degree skew, which the count aggregation absorbs map-side.
     """
-    from ..cache import persist_stage
+    from ..cache import checkpoint_stage
 
     s, d = F.col(src_col), F.col(dst_col)
     # The edge relation is loop-invariant and joined EVERY round —
     # materialize it once (the pagerank/triangles/BFS/SSSP discipline;
     # forgetting this re-derived a 5-table upstream join per round and
     # made nation_trade_communities the slowest query in the sf0.1
-    # bench, 23 s vs its siblings' single digits).  localCheckpoint
+    # bench, 23 s vs its siblings' single digits).  checkpoint
     # rather than persist (r13): the persist deduped execution, but
     # every round's join still re-embedded the full upstream plan for
     # Catalyst to re-analyze; the checkpoint splices in a scan.
-    e = edges.select(s.alias("__s"), d.alias("__d")).localCheckpoint(
-        eager=False
-    )
+    e = checkpoint_stage(edges.select(s.alias("__s"), d.alias("__d")), eager=False)
     nodes = (
         e.select(F.col("__s").alias("node"))
         .union(e.select("__d"))
@@ -446,17 +441,20 @@ def label_propagation(
     # argmax instead: one join per round gone, and the union is
     # exchange-free.  Same (node, label) set every round — pinned by
     # tests/test_graph.py and the nation_trade_communities oracle.
-    # localCheckpoint, not persist: a persist dedupes EXECUTION but
+    # checkpoint, not persist: a persist dedupes EXECUTION but
     # every round's union would still re-embed (and Catalyst would
     # re-analyze) the full upstream subtree — the committed plans
     # showed 578 → 2343 Exchange nodes before this truncation; the
     # checkpoint makes each union splice in a scan (lazy: it
     # materializes inside round 1's job).
-    isolated = nodes.join(
-        e.select(F.col("__d").alias("node")).distinct(),
-        "node",
-        "left_anti",
-    ).withColumn("label", F.col("node")).localCheckpoint(eager=False)
+    isolated = checkpoint_stage(
+        nodes.join(
+            e.select(F.col("__d").alias("node")).distinct(),
+            "node",
+            "left_anti",
+        ).withColumn("label", F.col("node")),
+        eager=False,
+    )
     labels = nodes.withColumn("label", F.col("node"))
     for i in range(iterations):
         pick = (
@@ -469,7 +467,7 @@ def label_propagation(
         )
         labels = pick.unionByName(isolated)
         if (i + 1) % checkpoint_every == 0 and i + 1 < iterations:
-            labels = labels.localCheckpoint()
+            labels = checkpoint_stage(labels)
     return labels
 
 
@@ -498,12 +496,12 @@ def k_core(
     Returns (node, deg): the surviving nodes with their degree inside
     the surviving subgraph.  Loop discipline: the base edge relation
     is persisted ONCE (the iterative-lint rule); the shrinking edge
-    set is localCheckpointed per round (it seeds the next join, the
+    set is checkpointed per round (it seeds the next join, the
     BFS lineage rule).  At 100 TB each round is one count shuffle +
     two semi-joins on the (shrinking) edge relation; skew follows
     degree skew, absorbed map-side by the count aggregation.
     """
-    from ..cache import persist_stage
+    from ..cache import checkpoint_stage, persist_stage
 
     if k < 1:
         raise ValueError("k must be >= 1")
@@ -517,17 +515,17 @@ def k_core(
             F.count(F.lit(1)).alias("deg")
         )
         keep = deg.where(F.col("deg") >= k).select("node")
-        # LAZY localCheckpoint (r13, guide §1.2: each eager checkpoint
+        # LAZY checkpoint (r13, guide §1.2: each eager checkpoint
         # was its own blocking job — 4 rounds cost 9 jobs).  The lazy
         # form still truncates lineage and materializes exactly once,
         # but it does so INSIDE the next round's degree job (or the
         # final aggregation), halving the loop's job count.  No
         # convergence probe reads these blocks mid-round (unlike
         # duplicate_clusters), so laziness is safe here.
-        cur = (
+        cur = checkpoint_stage(
             cur.join(keep.withColumnRenamed("node", "__s"), "__s", "leftsemi")
-            .join(keep.withColumnRenamed("node", "__d"), "__d", "leftsemi")
-            .localCheckpoint(eager=False)
+            .join(keep.withColumnRenamed("node", "__d"), "__d", "leftsemi"),
+            eager=False,
         )
     return (
         cur.groupBy(F.col("__s").alias("node"))
@@ -574,21 +572,22 @@ def hits_fixed_point(
     relation; loop-invariant edges persist ONCE (iterative-lint rule).
     Returns (node, hub, auth) — BIGINTs after `iterations` rounds.
     """
-    from ..cache import persist_stage
+    from ..cache import checkpoint_stage, persist_stage
 
     if iterations < 1:
         raise ValueError("iterations must be >= 1")
     derived = int(2 ** (62 / (2 * iterations)))
     max_nodes = derived if max_nodes is None else min(int(max_nodes), derived)
-    # localCheckpoint, not persist, for the loop-joined edge relation
+    # checkpoint, not persist, for the loop-joined edge relation
     # (r13): the persist deduped execution but every round still
     # re-embedded the upstream plan text twice for Catalyst to
     # re-analyze — the checkpoint splices in a scan (committed plans:
     # 908 Exchange nodes after the r12 sparse rewrite, single digits
     # once truncated).
-    e = edges.select(
-        F.col(src_col).alias("src"), F.col(dst_col).alias("dst")
-    ).localCheckpoint(eager=False)
+    e = checkpoint_stage(
+        edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst")),
+        eager=False,
+    )
     nodes = persist_stage(
         e.select(F.col("src").alias("node")).union(e.select("dst")).distinct()
     )
@@ -635,8 +634,8 @@ def hits_fixed_point(
             .agg(F.sum("auth").alias("hub"))
         )
         if (i + 1) % 2 == 0 and i + 1 < iterations:
-            hubs = hubs.localCheckpoint(eager=True)
-            auths = auths.localCheckpoint(eager=True)
+            hubs = checkpoint_stage(hubs)
+            auths = checkpoint_stage(auths)
     ha = hubs.withColumnRenamed("node", "__hn")
     aa = auths.withColumnRenamed("node", "__an")
     return (

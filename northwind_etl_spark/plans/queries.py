@@ -5004,6 +5004,7 @@ def trade_community_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
     LPA ran on.  The oracle replays the SAME 4 unrolled LPA rounds
     (the nation_trade_communities CTE chain) and the same integer
     modularity arithmetic."""
+    from ..cache import checkpoint_stage
     from ..operators.graph import label_propagation
 
     pairs = _nation_trade_pairs(spark, sf_dir)
@@ -5030,11 +5031,9 @@ def trade_community_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
     # checkpoint truncates each branch's plan to a scan of existing
     # partitions (values unchanged — same relations, materialized
     # eagerly here instead of lazily at first use).
-    ue = _above_mean(upairs, "ucnt").select("a", "b").localCheckpoint()
+    ue = checkpoint_stage(_above_mean(upairs, "ucnt").select("a", "b"))
     both = ue.union(ue.select(F.col("b").alias("a"), F.col("a").alias("b")))
-    labels = label_propagation(
-        both, "a", "b", iterations=4
-    ).localCheckpoint()
+    labels = checkpoint_stage(label_propagation(both, "a", "b", iterations=4))
     la = labels.withColumnRenamed("node", "a").withColumnRenamed(
         "label", "ca"
     )

@@ -15,7 +15,7 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import SparkSession
 
-DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_SHUFFLE", "32"))
+DEFAULT_SHUFFLE_PARTITIONS = 32
 
 # Engine confs of every session get_spark builds (local harness,
 # spark-submit).  A session built elsewhere (the correctness driver's

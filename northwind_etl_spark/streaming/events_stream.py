@@ -358,6 +358,9 @@ def source_parquet_bytes(path: str) -> int | None:
     return None
 
 
+STREAM_PART_BYTES = 32 << 20
+
+
 def adaptive_stream_partitions(input_bytes: int) -> int:
     """Shuffle/state partition count for a streaming drain, DERIVED
     FROM THE SOURCE SIZE (optimization guide §2: make partitioning
@@ -372,20 +375,15 @@ def adaptive_stream_partitions(input_bytes: int) -> int:
     stores per partition) to drain a few-MB fixture, while a
     100 TB/day stream would be stuck with the same constant.  Sizing
     by source bytes fixes both ends: floor 1, no cap, linear in the
-    input.  The target bytes-per-partition is env-tunable
-    (``SPARK_GRAFT_STREAM_PART_BYTES``, default 32 MiB of source
-    bytes); production deployments with large per-key state lower it
-    (more, smaller stores), compact-state pipelines raise it.
+    input, at ``STREAM_PART_BYTES`` (32 MiB) of source bytes per
+    partition.
 
     Partition count never changes WHAT a streaming query emits — the
     keyed state operators are partitioning-independent by contract
     (each entry's oracle pins the semantics, not the layout); only
     task/state-store overhead moves.
     """
-    target = int(
-        os.environ.get("SPARK_GRAFT_STREAM_PART_BYTES", str(32 << 20))
-    )
-    return max(1, -(-int(input_bytes) // max(1, target)))
+    return max(1, -(-int(input_bytes) // STREAM_PART_BYTES))
 
 
 def run_available_now(

@@ -1,27 +1,59 @@
 #!/usr/bin/env python
-"""Pre-flight the driver's correctness window: run the first N (50)
-registry entries at sf0.01 exactly the way the driver will — vanilla
-session, oracle compare where an oracle exists, rows-only otherwise —
-and print one status line per entry plus a summary.
+"""Run registry entries exactly the way the correctness driver does —
+vanilla session from a neutral cwd, schema + plan lints on every entry,
+oracle compare where an oracle exists, rows-only otherwise — and print
+one status line per entry plus a summary.
 
-Usage: python scripts/preflight.py [N] [sf_dir]
+Usage: python scripts/preflight.py [--sf DIR] [N | name ...]
+
+Without names it runs the iterative-operator lint pre-pass plus the
+first N (default 50) entries; with names it runs just those entries.
+DIR defaults to $SPARK_GRAFT_SF_DIR.  Exits 1 on any failure.
 """
 
 from __future__ import annotations
 
+import argparse
 import os
 import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-sys.path.insert(
-    0, os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "tests")
-)
+_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, _ROOT)
+sys.path.insert(0, os.path.join(_ROOT, "tests"))
+
+
+def _lint_prepass(spark, sf_dir: str) -> list[str]:
+    # loop-invariant-input lint (r07 LPA lesson — an unpersisted loop
+    # input is a silent 6x scale regression).  It reads the passed
+    # sf_dir so it works wherever the data lives; a lint-harness crash
+    # is REPORTED as a failure, not an abort.
+    from iterative_lint import lint_iterative_operators
+
+    try:
+        failures = lint_iterative_operators(spark, sf_dir)
+    except Exception as exc:  # noqa: BLE001 — report, don't abort
+        failures = [f"iterative-lint harness error: {exc!r}"]
+    for f in failures:
+        print(f"LINT {f}", flush=True)
+    print(
+        f"iterative-operator lint: {'OK' if not failures else 'FAILED'}",
+        flush=True,
+    )
+    return failures
 
 
 def main() -> None:
-    n = int(sys.argv[1]) if len(sys.argv) > 1 else 50
-    sf_dir = sys.argv[2] if len(sys.argv) > 2 else "/root/testdata/sf0.01"
+    ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
+    ap.add_argument("--sf", default=os.environ.get("SPARK_GRAFT_SF_DIR"))
+    ap.add_argument("entries", nargs="*", help="N, or entry names")
+    args = ap.parse_args()
+    if not args.sf:
+        ap.error("--sf DIR (or $SPARK_GRAFT_SF_DIR) is required")
+    sf_dir = os.path.abspath(args.sf)
+    window_mode = len(args.entries) <= 1 and all(
+        e.isdigit() for e in args.entries
+    )
 
     # Run from a NEUTRAL cwd before the JVM starts: python workers put
     # their cwd on sys.path, so preflighting from the repo root lets
@@ -44,30 +76,15 @@ def main() -> None:
     from plan_lint import lint_physical_plan
     from schema_lint import decimal_output_columns
 
-    # pre-pass: loop-invariant-input lint (r07 LPA lesson — an
-    # unpersisted loop input is a silent 6x scale regression).  The
-    # lint reads the passed sf_dir so it works wherever the data lives
-    # (ADVICE r08: the hardcoded default broke foreign invocations);
-    # a lint-harness crash is REPORTED as a failure, not an abort.
-    from iterative_lint import lint_iterative_operators
-
-    try:
-        lint_failures = lint_iterative_operators(spark, sf_dir)
-    except Exception as exc:  # noqa: BLE001 — report, don't abort
-        lint_failures = [f"iterative-lint harness error: {exc!r}"]
-    for f in lint_failures:
-        print(f"LINT {f}", flush=True)
-    print(
-        f"iterative-operator lint: "
-        f"{'OK' if not lint_failures else 'FAILED'}",
-        flush=True,
-    )
-
+    lint_failures = _lint_prepass(spark, sf_dir) if window_mode else []
     qs, osql = E.queries(), E.oracle_sql()
     con = duck_connection(sf_dir)
-    window = list(qs)[:n]
+    if window_mode:
+        names = list(qs)[: int(args.entries[0]) if args.entries else 50]
+    else:
+        names = args.entries
     bad = []
-    for name in window:
+    for name in names:
         t0 = time.perf_counter()
         try:
             df = qs[name](spark, sf_dir)
@@ -81,7 +98,7 @@ def main() -> None:
             # registry-wide physical-plan lint (r09): generalizes the
             # per-query plan contracts (no CartesianProduct, no
             # row-at-a-time Python UDF, no unbounded single-partition
-            # funnel) over every windowed entry.
+            # funnel) over every entry run.
             plan_hits = lint_physical_plan(df, name)
             if plan_hits:
                 raise AssertionError(f"plan lint: {plan_hits}")
@@ -94,13 +111,13 @@ def main() -> None:
                 rows = df.count()
                 ok, detail = True, {"rows_only": rows}
         except Exception as exc:  # noqa: BLE001 — report, don't abort
-            ok, detail = False, {"err": repr(exc)[:200]}
+            ok, detail = False, {"err": repr(exc)[:300]}
         dt = round(time.perf_counter() - t0, 1)
         status = "ok " if ok else "FAIL"
         print(f"{status} {name:42s} {dt:6.1f}s {detail}", flush=True)
         if not ok:
             bad.append(name)
-    print(f"\n{len(window) - len(bad)}/{len(window)} green; failures: {bad}")
+    print(f"\n{len(names) - len(bad)}/{len(names)} green; failures: {bad}")
     sys.exit(1 if (bad or lint_failures) else 0)
 
 

@@ -1,5 +1,6 @@
-"""Tracked persist + release for shared multi-consumer stages
-(cache.py), and the reliable-checkpoint variant of duplicate_clusters.
+"""Tracked persist + release for shared multi-consumer stages, and
+checkpoint_stage's switch to fault-tolerant checkpoints when the
+session has a checkpoint dir (cache.py).
 """
 
 from __future__ import annotations
@@ -7,9 +8,30 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from northwind_etl_spark.cache import persist_stage, release_stages, stage_cache_scope
+from northwind_etl_spark.cache import persist_stage, release_stages
+from northwind_etl_spark.operators import graph as G
 from northwind_etl_spark.operators.dedup import duplicate_clusters
 from northwind_etl_spark.operators.text import tf_idf
+
+
+def _clear_checkpoint_dir(sc) -> None:
+    # PySpark has no unset: write Scala's None into SparkContext's
+    # checkpointDir field through its generated setter
+    getattr(sc._jsc.sc(), "checkpointDir_$eq")(sc._jvm.scala.Option.apply(None))
+
+
+@pytest.fixture
+def checkpoint_dir(spark, tmp_path):
+    """A session-wide checkpoint dir for one test: every
+    checkpoint_stage inside it writes fault-tolerant checkpoints.
+    Cleared on teardown, or every later loop in the session would
+    checkpoint to disk too."""
+    sc = spark.sparkContext
+    assert sc.getCheckpointDir() is None
+    sc.setCheckpointDir(str(tmp_path / "ckpt"))
+    yield tmp_path / "ckpt"
+    _clear_checkpoint_dir(sc)
+    assert sc.getCheckpointDir() is None
 
 
 def _cached_rdd_count(spark) -> int:
@@ -28,21 +50,6 @@ def test_release_stages_unpersists(spark, sf_dir):
     # correctness is unaffected: a released stage recomputes
     assert tf_idf(docs, "text", "doc_id").count() > 0
     release_stages()
-
-
-def test_stage_cache_scope_releases_only_inner(spark, sf_dir):
-    release_stages()
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    outer = persist_stage(docs.select("doc_id"))
-    outer.count()
-    with stage_cache_scope():
-        tf_idf(docs, "text", "doc_id").count()
-        inside = _cached_rdd_count(spark)
-        assert inside >= 3  # outer + the two text stages
-    after = _cached_rdd_count(spark)
-    assert after < inside  # inner stages released on exit
-    assert release_stages() >= 1  # outer still tracked
-    assert _cached_rdd_count(spark) == 0
 
 
 def test_persist_tracking_is_thread_safe(spark, sf_dir):
@@ -65,15 +72,39 @@ def test_persist_tracking_is_thread_safe(spark, sf_dir):
     assert release_stages() == 0
 
 
-def test_duplicate_clusters_reliable_checkpoint(spark, tmp_path):
+def test_duplicate_clusters_reliable_checkpoint(spark, checkpoint_dir):
     pairs = spark.createDataFrame([(1, 2), (2, 3), (10, 11)], "id_a LONG, id_b LONG")
-    sc = spark.sparkContext
-    # without a checkpoint dir the reliable path must fail loudly
-    if sc.getCheckpointDir() is None:
-        with pytest.raises(ValueError, match="checkpoint dir"):
-            duplicate_clusters(pairs, reliable=True).collect()
-    sc.setCheckpointDir(str(tmp_path / "ckpt"))
-    labels = {
-        r.id: r.cluster for r in duplicate_clusters(pairs, reliable=True).collect()
-    }
+    labels = {r.id: r.cluster for r in duplicate_clusters(pairs).collect()}
     assert labels == {1: 1, 2: 1, 3: 1, 10: 10, 11: 10}
+    assert list(checkpoint_dir.glob("*/rdd-*"))
+
+
+def test_loops_with_checkpoint_dir_match_local(spark, checkpoint_dir):
+    """Every loop gives the same rows whether its checkpoints are
+    local or written to the checkpoint dir."""
+    sc = spark.sparkContext
+    # triangle a-b-c, pendant chain c-d-e, separate pair f-g
+    und = [("a", "b"), ("b", "c"), ("a", "c"), ("c", "d"), ("d", "e"), ("f", "g")]
+    edges = spark.createDataFrame(
+        und + [(b, a) for a, b in und], "src STRING, dst STRING"
+    )
+    pairs = spark.createDataFrame(
+        [(1, 2), (2, 3), (3, 4), (10, 11)], "id_a LONG, id_b LONG"
+    )
+
+    def run_all() -> list[list[tuple]]:
+        outs = [
+            G.pagerank_fixed_point(edges, iterations=8),
+            G.label_propagation(edges, iterations=4),
+            G.bfs_hops(edges, "a"),
+            G.k_core(edges, k=2, rounds=3),
+            G.hits_fixed_point(edges, iterations=4),
+            duplicate_clusters(pairs),
+        ]
+        return [sorted(map(tuple, df.collect())) for df in outs]
+
+    with_dir = run_all()
+    assert list(checkpoint_dir.glob("*/rdd-*"))
+    _clear_checkpoint_dir(sc)
+    assert with_dir == run_all()
+    release_stages()  # the loops' persisted edge stages

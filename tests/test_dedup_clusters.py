@@ -28,14 +28,10 @@ def test_duplicate_clusters_lineage_bounded(spark):
     labels = duplicate_clusters(pairs, max_iters=10)
     assert {r.cluster for r in labels.collect()} == {1}
     # pointer jumping: diameter-7 chain must converge in O(log d)
-    # passes (≤4), far under the naive 7-pass propagation bound
-    import warnings
-
-    with warnings.catch_warnings(record=True) as w:
-        warnings.simplefilter("always")
-        fast = duplicate_clusters(pairs, max_iters=4)
+    # passes (≤4), far under the naive 7-pass propagation bound (an
+    # unconverged run raises)
+    fast = duplicate_clusters(pairs, max_iters=4)
     assert {r.cluster for r in fast.collect()} == {1}
-    assert not any("still changing" in str(x.message) for x in w)
     plan = labels._jdf.queryExecution().optimizedPlan().toString()
     # a checkpointed result plans as a scan of existing partitions; the
     # full multi-pass join cascade must NOT be in the lineage
@@ -44,12 +40,8 @@ def test_duplicate_clusters_lineage_bounded(spark):
 
 def test_duplicate_clusters_raises_on_nonconvergence(spark):
     """Verdict r09: under-convergence must be machine-visible — a
-    planted chain graph whose diameter exceeds max_iters raises by
-    default (a normal return IS the convergence certificate), and
-    allow_partial=True restores the old warn-and-return-partial
-    contract with labels that are a valid refinement."""
-    import warnings
-
+    planted chain graph whose diameter exceeds max_iters raises (a
+    normal return IS the convergence certificate)."""
     import pytest
 
     pairs = spark.createDataFrame(
@@ -57,15 +49,6 @@ def test_duplicate_clusters_raises_on_nonconvergence(spark):
     )
     with pytest.raises(RuntimeError, match="still changing"):
         duplicate_clusters(pairs, max_iters=2)
-    with warnings.catch_warnings(record=True) as w:
-        warnings.simplefilter("always")
-        labels = duplicate_clusters(pairs, max_iters=2, allow_partial=True)
-    assert any("still changing" in str(x.message) for x in w)
-    # partial labels are a valid refinement: every label <= its id and
-    # present in the universe (no invented ids)
-    rows = labels.collect()
-    ids = {r.id for r in rows}
-    assert all(r.cluster <= r.id and r.cluster in ids for r in rows)
 
 
 def test_keep_canonical_drops_non_canonical(spark):

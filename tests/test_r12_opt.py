@@ -117,10 +117,5 @@ def test_adaptive_stream_partitions_scales():
     assert adaptive_stream_partitions(32 << 20) == 1
     assert adaptive_stream_partitions((32 << 20) + 1) == 2
     # linear at scale: 1 TiB of source -> 32768 partitions at the
-    # 32 MiB default target
+    # 32 MiB target
     assert adaptive_stream_partitions(1 << 40) == 32768
-
-
-def test_adaptive_stream_partitions_env_override(monkeypatch):
-    monkeypatch.setenv("SPARK_GRAFT_STREAM_PART_BYTES", str(1 << 20))
-    assert adaptive_stream_partitions(10 << 20) == 10
