@@ -36,8 +36,8 @@ witnesses the overlap — or pre-split outliers: a long interval may be
 cut into chunks (each chunk keeps the ORIGINAL bounds as payload) and
 the pair-dedup step already collapses the duplicate hits.  Neither is
 automatic here; the operator is deliberately one explode with a
-measurable cost model (scripts/scale_probe.py carries its scaling
-rows).
+measurable cost model (time it at scale with scripts/make_scale_dir.py
+plus bench.py).
 """
 
 from __future__ import annotations

@@ -5,7 +5,7 @@ floor-bound — 8 cores beat 32 on 35/44 cells — so parallel
 scale-safety claims need an operating point where compute dominates).
 
 Replication emulates a DIVERSE corpus at N× size, not N copies of one
-corpus (the scripts/scale_probe.py rules, extended to every table):
+corpus:
 
 - region/nation: copied once (fixed dimension tables — FK targets).
 - customer/supplier/part: keys shifted by i·10⁹ per replica; NAMES go

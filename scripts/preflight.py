@@ -1,8 +1,10 @@
 #!/usr/bin/env python
 """Run registry entries exactly the way the correctness driver does —
-vanilla session from a neutral cwd, schema + plan lints on every entry,
-oracle compare where an oracle exists, rows-only otherwise — and print
-one status line per entry plus a summary.
+vanilla session from a neutral cwd, the static entry lints of
+tests/entry_lint.py (the rules Tier-1 applies) on every entry, oracle
+compare where an oracle exists, rows-only otherwise — and print one
+status line per entry plus a summary.  It does not compare plan shapes
+with the ledger: that is pinned at the Tier-1 scale factor only.
 
 Usage: python scripts/preflight.py [--sf DIR] [N | name ...]
 
@@ -73,8 +75,7 @@ def main() -> None:
 
     import __spark_entry__ as E
     from oracle_harness import compare, duck_connection
-    from plan_lint import lint_physical_plan
-    from schema_lint import decimal_output_columns
+    from entry_lint import lint_entry
 
     lint_failures = _lint_prepass(spark, sf_dir) if window_mode else []
     qs, osql = E.queries(), E.oracle_sql()
@@ -88,20 +89,9 @@ def main() -> None:
         t0 = time.perf_counter()
         try:
             df = qs[name](spark, sf_dir)
-            # registry-wide output-schema lint (r09): the driver's
-            # canonicalizer has never hash-greenlit a DECIMAL column
-            # in 8 rounds — reject structurally, the local oracle
-            # compare cannot see this divergence class.
-            dec_cols = decimal_output_columns(df)
-            if dec_cols:
-                raise AssertionError(f"DECIMAL output column(s): {dec_cols}")
-            # registry-wide physical-plan lint (r09): generalizes the
-            # per-query plan contracts (no CartesianProduct, no
-            # row-at-a-time Python UDF, no unbounded single-partition
-            # funnel) over every entry run.
-            plan_hits = lint_physical_plan(df, name)
-            if plan_hits:
-                raise AssertionError(f"plan lint: {plan_hits}")
+            hits = lint_entry(df, name)
+            if hits:
+                raise AssertionError(f"entry lint: {hits}")
             if name in osql:
                 r = compare(df, con, osql[name])
                 ok, detail = r["ok"], {

@@ -21,3 +21,11 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir() -> str:
     return SF_DIR
+
+
+@pytest.fixture(scope="session")
+def registry_lint(spark, sf_dir) -> tuple[list[str], list[str]]:
+    """(lint hits, ledger diffs) of the one walk over the registry."""
+    from .entry_lint import lint_registry
+
+    return lint_registry(spark, sf_dir)

@@ -11,6 +11,7 @@ from collections import Counter
 import pytest
 
 from northwind_etl_spark.operators.bpe import (
+    _persistent_rdd_ids,
     bpe_word_types,
     learn_bpe_merges,
 )
@@ -107,15 +108,13 @@ def test_bpe_leaves_no_persistent_blocks(spark):
     """learn_bpe_merges must release its word-type persist AND its
     localCheckpoint blocks on return — checkpoint blocks bypass the SQL
     cache manager and would otherwise linger until async GC."""
-    def n_persistent():
-        return spark.sparkContext._jsc.sc().getPersistentRDDs().size()
-
-    base = n_persistent()
+    sc = spark.sparkContext
+    before = _persistent_rdd_ids(sc)
     texts = ["low lower lowest newer newest " * 5] * 4
     df = spark.createDataFrame([(i, t) for i, t in enumerate(texts)], ["doc_id", "text"])
     out = learn_bpe_merges(df, "text", n_merges=7, min_freq=2, checkpoint_every=2)
     assert out.count() > 0
-    assert n_persistent() == base
+    assert _persistent_rdd_ids(sc) - before == set()
 
 
 def test_encode_with_merges_matches_reference_vocab(spark):
@@ -123,6 +122,7 @@ def test_encode_with_merges_matches_reference_vocab(spark):
     count the reference implementation's final vocab implies."""
     from northwind_etl_spark.operators.bpe import encode_with_merges
 
+    before = _persistent_rdd_ids(spark.sparkContext)
     texts = ["low lower lowest", "low low lowest", "newer newest new"]
     n = 8
     merges = _reference_bpe(texts, n, 2)
@@ -157,11 +157,13 @@ def test_encode_with_merges_matches_reference_vocab(spark):
     assert got == want
     # intermediate checkpoint blocks are freed; only the tracked
     # stage-cache entry (the word->symbol map) remains, and
-    # release_stages clears it
+    # release_stages clears it.  Compared by RDD id against the blocks
+    # held before the call: earlier tests' blocks, and the cleaner
+    # dropping them meanwhile, are not this call's.
     from northwind_etl_spark.cache import release_stages
 
     release_stages()
-    assert spark.sparkContext._jsc.sc().getPersistentRDDs().size() == 0
+    assert _persistent_rdd_ids(spark.sparkContext) - before == set()
 
 
 def test_bpe_symbols_survive_escaped_string_literals(spark):

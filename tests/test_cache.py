@@ -10,6 +10,7 @@ from pyspark.sql import functions as F
 
 from northwind_etl_spark.cache import persist_stage, release_stages
 from northwind_etl_spark.operators import graph as G
+from northwind_etl_spark.operators.bpe import _persistent_rdd_ids
 from northwind_etl_spark.operators.dedup import duplicate_clusters
 from northwind_etl_spark.operators.text import tf_idf
 
@@ -34,19 +35,18 @@ def checkpoint_dir(spark, tmp_path):
     assert sc.getCheckpointDir() is None
 
 
-def _cached_rdd_count(spark) -> int:
-    jsc = spark.sparkContext._jsc.sc()
-    return jsc.getPersistentRDDs().size()
-
-
 def test_release_stages_unpersists(spark, sf_dir):
+    # by RDD id, not by count: earlier tests' blocks, and the cleaner
+    # dropping them meanwhile, are not this call's
+    sc = spark.sparkContext
     release_stages()  # start from a clean slate
-    base = _cached_rdd_count(spark)
+    before = _persistent_rdd_ids(sc)
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     tf_idf(docs, "text", "doc_id").count()  # persists _doc_tokens + _doc_term_counts
-    assert _cached_rdd_count(spark) > base
+    created = _persistent_rdd_ids(sc) - before
+    assert created
     assert release_stages() >= 2
-    assert _cached_rdd_count(spark) == base
+    assert _persistent_rdd_ids(sc) & created == set()
     # correctness is unaffected: a released stage recomputes
     assert tf_idf(docs, "text", "doc_id").count() > 0
     release_stages()

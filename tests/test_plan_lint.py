@@ -1,153 +1,68 @@
-"""Registry-wide physical-plan lint: EVERY registered query's executed
-plan is checked against the three distributed-execution bans —
-
-1. CartesianProduct: never (an O(n*m) pair explosion at scale).
-2. BatchEvalPython: never (row-at-a-time Python; all Python in the
-   repo must cross via Arrow -- ArrowEvalPython / MapInPandas /
-   FlatMapGroupsInPandas).
-3. BroadcastNestedLoopJoin: only for the enumerated scalar-broadcast
-   patterns below, where the build side is a 1-row aggregate (a
-   corpus total, a query vector, a threshold) or a deliberately tiny
-   cross product.  The whitelist is exact in both directions -- a new
-   BNLJ fails the lint, and a whitelisted query that stops needing
-   one fails too, so the list can never rot.
-
-The TPC-H suite additionally pins per-query shapes in test_tpch.py;
-this lint is the safety net for the other ~170 entries.
+"""The plan rules and the plan-shape ledger over the registry walk of
+the ``registry_lint`` fixture, and red-team cases that plant each
+banned shape and demand a hit.  test_tpch.py pins TPC-H plan shapes.
 """
 
 from __future__ import annotations
 
-from northwind_etl_spark.plans.queries import QUERIES
+import pytest
+from pyspark.sql import functions as F
 
-# Scalar-broadcast / designed-tiny BNLJ users (reviewed one by one:
-# every build side is a no-grouping aggregate or a bounded literal
-# frame -- see each query's docstring).
-BNLJ_WHITELIST = {
-    "boilerplate_cleaned_docs",      # corpus doc-count scalar
-    "table_diff_summary",            # dirty-bucket count scalar
-    "source_length_drift",           # global bin spine vs group grid
-    "bigram_surprisal_scores",       # corpus c2/V scalars
-    "heavy_hitter_terms",            # total-count threshold scalar
-    "nation_trade_pagerank",         # node-count / teleport scalar
-    "nation_trade_triangles",        # edge-threshold scalar
-    # nation_trade_communities / nation_trade_hits left the list in
-    # r13: their loop-invariant edge relations are localCheckpointed,
-    # so the above-mean threshold BNLJ no longer appears in the final
-    # plan (it runs once inside the checkpoint materialization)
-    "copurchase_rules",              # basket-count scalar
-    "q22_dormant_customers",         # avg-balance scalar (designed)
-    "tfidf_scores",                  # n_docs scalar
-    "cross_join_flag_region",        # designed tiny cross product
-    "q11_important_parts",           # value-threshold scalar
-    "unigram_surprisal_scores",      # corpus-total scalar
-    "knn_bruteforce_topk",           # 1-row query-vector broadcast
-    "hard_negative_mining",          # bounded anchor frame broadcast (<=40 rows)
-    "blocking_quality_metrics",      # truth-set total scalars
-    "tcloseness_class_distances",    # global-N scalar
-    "nation_balance_target_encoding",  # global-sum scalar
-    "mixture_sampled_docs",          # 1-row mixture-unit scalar
-    "mixture_budget_docs",           # 1-row budget-unit scalar
-    "funnel_wilson_bounds",          # 1-row step-count scalars
-    # r08 additions — all 1-row / bounded broadcasts, reviewed:
-    "bm25_keyword_topk",             # 1-row corpus-stats (N, Σdl, dfs)
-    "rrf_fused_topk",                # 1-row anchor vector (knn pattern)
-    "langid_agreement_kappa",        # 1-row totals ⨯ 1-row pe_num
-    "order_key_skew_profile",        # 1-row aggregate ⨯ 1-row top10
-    "revenue_half_sample_ci",        # 1-row full-mean ⨯ 1-row CI picks
-    "orders_customer_join_estimate",  # three 1-row stat frames joined
-    # r09 additions:
-    "dsir_en_importance_weights",    # two 1-row model-total scalars
-    "zorder_locality_report",        # 1-row min/max binning stats
-    "trade_community_modularity",    # 1-row m + above-mean threshold scalars
-    "trade_degree_assortativity",    # above-mean threshold scalar
-    "doc_length_quantile_norm",      # 1-row pooled-N scalar
-    "term_pmi_collocations",         # 1-row corpus-N scalar
-    # r10 additions — reviewed bounded broadcasts:
-    "shipdate_zonemap_skipping",     # 1-row sorted-endpoint arrays (sweep depth)
-    "training_manifest_shards",      # mixture_sample's 1-row unit scalar
-    "mixture_schedule_steps",        # non-equi probe vs source-count-bounded quotas
-    # r10 batches 3-4 — reviewed bounded broadcasts:
-    "signup_conversion_survival",    # 1-row observation-end scalar
-    "experiment_cuped_readout",      # 1-row midpoint scalar
-    "events_value_psi_drift",        # 1-row midpoint scalar
-    "bm25_ndcg_eval",                # 1-row corpus-stats (bm25 pattern)
-    "source_term_jsd_pairs",         # totals ⨯ 100-row vocabulary grid
-    "type_value_mutual_info",        # 1-row N scalar ⨯ bucket marginals
-    "langid_agreement_alpha",        # 1-row totals ⨯ 1-row pooled-S
-    "quality_margin_auc",            # 1-row row-count guard scalar
-    "quality_margin_gains",          # 1-row row-count guard scalar
-    "daily_revenue_runs_test",       # 1-row median + 1-row day count
-    # r11 additions — reviewed bounded broadcasts:
-    "user_topk_mergeable",           # 1-row err-bound scalar
-    "minhash_delta_candidates",      # 1-row hot-bucket guard scalar
-    "minhash_band_recall_eval",      # three 1-row count frames + guard
-    "int8_ann_recall_eval",          # query-panel broadcast (fixed panel in production; N/50 at test SF — the knn brute-force pattern)
-    "robots_block_rate",             # 6-row rules table, startswith theta-join
-    "rp_lsh_recall_eval",            # three 1-row count frames + 1-row guard
-    "license_token_budget",          # 1-row total/budget scalar
-    "minhash_erasure_impact",        # 1-row hot-bucket guard scalar
-    "source_temperature_budget",     # 1-row total/budget scalar
-    # r12 additions — reviewed bounded broadcasts:
-    "matryoshka_recall_eval",        # query-panel broadcast (int8 pattern)
-    "pq_ann_recall_eval",            # query-panel broadcast + per-query LUT arrays
-    "ivf_ann_recall_eval",           # query-panel broadcast + 8 centroid distances
-    "lsh_band_sweep_eval",           # per-config 1-row count frames + guards
-    "term_topk_churn",               # 1-row two-side contract guard scalar
-    "floored_mixture_budget",        # 1-row floor/budget spec + 1-row weight totals
-    "length_ks_by_source",           # |groups|-row spine cross join + 1-row total
-    "matryoshka_rbo_eval",           # query-panel broadcast (int8 pattern)
-    # r12 batch 3/4 — reviewed bounded broadcasts:
-    "sliding_distinct_users_hll",    # day-spine range join over the ≤days·256 register state
-    "hll_click_purchase_overlap",    # four 1-row estimate/exact frames joined
-    "ams_f2_sketch_eval",            # 1-row exact-F2 frame ⨯ 1-row estimate
-    "bloom_fpr_eval",                # ≤64-row word-signature broadcast + 1-row stats frames
-    "daily_revenue_acf",             # 7-row lag spine ⨯ calendar-bounded daily aggregate
-    "daily_revenue_pacf",            # 3-row lag spine (the ACF shape) + 1-row pivot
-}
+from northwind_etl_spark.cache import persist_stage, release_stages
+
+from .entry_lint import REGENERATE, build_entry, lint_entry, plan_shape, shape_diffs
 
 
-def test_registry_plan_lint(spark, sf_dir):
-    cartesian, row_python, bnlj = [], [], set()
-    for name, fn in QUERIES.items():
-        plan = fn(spark, sf_dir)._jdf.queryExecution().executedPlan().toString()
-        if "CartesianProduct" in plan:
-            cartesian.append(name)
-        if "BatchEvalPython" in plan:
-            row_python.append(name)
-        if "BroadcastNestedLoopJoin" in plan:
-            bnlj.add(name)
-    assert not cartesian, f"CartesianProduct in: {cartesian}"
-    assert not row_python, f"row-at-a-time Python UDF in: {row_python}"
-    assert bnlj - BNLJ_WHITELIST == set(), (
-        f"unreviewed BroadcastNestedLoopJoin in: {sorted(bnlj - BNLJ_WHITELIST)}"
-    )
-    assert BNLJ_WHITELIST - bnlj == set(), (
-        f"stale whitelist entries (no BNLJ anymore): {sorted(BNLJ_WHITELIST - bnlj)}"
-    )
+def test_registry_lints(registry_lint):
+    diffs = registry_lint[1]
+    if diffs is None:
+        pytest.skip("the plan-shape ledger pins another scale factor")
+    assert not diffs, "plan shapes moved:\n" + "\n".join(diffs)
 
 
-# ---- r09: shared lint module (also run per-entry in scripts/preflight.py)
-# adds the Exchange-SinglePartition funnel rule on top of the bans above.
-
-from pyspark.sql import functions as F  # noqa: E402
-
-from .plan_lint import lint_physical_plan  # noqa: E402
+def test_registry_plan_lint(registry_lint):
+    hits = registry_lint[0]["plan"]
+    assert not hits, "\n".join(hits)
 
 
-def test_registry_single_partition_funnel_lint(spark, sf_dir):
-    hits = []
-    for name, fn in QUERIES.items():
-        hits.extend(lint_physical_plan(fn(spark, sf_dir), name))
-    assert not hits, f"plan-lint hits: {hits}"
+def test_registry_single_partition_funnel_lint(registry_lint):
+    hits = registry_lint[0]["funnel"]
+    assert not hits, "\n".join(hits)
 
 
 def test_lint_redteam_cartesian_product(spark):
     a = spark.range(10).toDF("x")
     b = spark.range(10).toDF("y")
     planted = a.hint("shuffle_replicate_nl").crossJoin(b)
-    hits = lint_physical_plan(planted, "planted")
+    hits = lint_entry(planted, "planted")
     assert any("CartesianProduct" in h for h in hits), hits
+
+
+def test_lint_redteam_cartesian_inside_persisted_stage(spark):
+    """A banned node hidden in a persisted stage is still a hit: the
+    walk enters the stage's cached plan."""
+    a = spark.range(10).toDF("x")
+    b = spark.range(10).toDF("y")
+    stage = persist_stage(a.hint("shuffle_replicate_nl").crossJoin(b))
+    try:
+        hits = lint_entry(stage.groupBy("x").count(), "planted")
+    finally:
+        release_stages()
+    assert any("CartesianProduct" in h for h in hits), hits
+
+
+def test_ledger_redteam_planted_shuffle_join(spark, sf_dir):
+    """One more shuffle join in an entry's plan turns the ledger
+    comparison red, naming the node classes that moved."""
+    name = "q1_pricing_summary"
+    df = build_entry(spark, name, sf_dir)
+    ledger = {name: plan_shape(df)}
+    assert shape_diffs({name: plan_shape(df)}, ledger) == []
+    grown = df.join(df.hint("shuffle_merge"), "count_order")
+    diffs = shape_diffs({name: plan_shape(grown)}, ledger)
+    assert any(f"{name}: ShuffleExchange" in d for d in diffs), diffs
+    assert any(f"{name}: SortMergeJoin 0 -> 1" in d for d in diffs), diffs
+    assert all(REGENERATE in d for d in diffs), diffs
 
 
 def test_lint_redteam_raw_row_global_window(spark, sf_dir):
@@ -157,7 +72,7 @@ def test_lint_redteam_raw_row_global_window(spark, sf_dir):
     planted = li.withColumn(
         "rn", F.row_number().over(Window.orderBy("l_orderkey", "l_linenumber"))
     )
-    hits = lint_physical_plan(planted, "planted")
+    hits = lint_entry(planted, "planted")
     assert any("SinglePartition" in h for h in hits), hits
 
 
@@ -168,7 +83,7 @@ def test_lint_redteam_row_python_udf(spark):
     try:
         f = F.udf(lambda x: x + 1, LongType(), useArrow=False)
         planted = spark.range(10).select(f("id").alias("y"))
-        hits = lint_physical_plan(planted, "planted")
+        hits = lint_entry(planted, "planted")
         assert any("BatchEvalPython" in h for h in hits), hits
     finally:
         spark.conf.unset("spark.sql.execution.pythonUDF.arrow.enabled")
@@ -177,6 +92,6 @@ def test_lint_redteam_row_python_udf(spark):
 def test_lint_allows_bounded_global_agg(spark, sf_dir):
     li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
     ok = li.agg(F.count(F.lit(1)).alias("n"))
-    assert lint_physical_plan(ok, "global_count") == []
+    assert lint_entry(ok, "global_count") == []
     topk = li.orderBy(F.desc("l_extendedprice")).limit(5)
-    assert lint_physical_plan(topk, "topk") == []
+    assert lint_entry(topk, "topk") == []

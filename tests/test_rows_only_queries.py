@@ -23,18 +23,11 @@ def test_rows_only_queries_run(name, spark, sf_dir):
     assert df.count() >= 0
 
 
-def test_all_query_schemas_are_scalar(spark, sf_dir):
-    """Driver-canonicalizer contract: no registered query may return an
-    array/map/struct column (pandas sort_values dies on unhashable
-    cells — broke approx_quantiles_quantity in round 1)."""
-    from pyspark.sql.types import ArrayType, MapType, StructType
-
-    bad = []
-    for name, fn in QUERIES.items():
-        for field in fn(spark, sf_dir).schema.fields:
-            if isinstance(field.dataType, ArrayType | MapType | StructType):
-                bad.append(f"{name}.{field.name}: {field.dataType.simpleString()}")
-    assert not bad, bad
+def test_all_query_schemas_are_scalar(registry_lint):
+    """No array/map/struct output column in any registry entry: pandas
+    ``sort_values`` dies on unhashable cells."""
+    hits = registry_lint[0]["non_scalar"]
+    assert not hits, "\n".join(hits)
 
 
 def test_entry_smoke(spark):

@@ -1,36 +1,29 @@
-"""Registry-wide output-schema lint (r09): no driver-facing entry may
-emit a DECIMAL column — the driver's canonicalizer has never hashed a
-cross-engine DECIMAL equal in 8 rounds (VERDICT r08 "What's wrong" #1),
+"""Red-team cases for the output-schema rules of
+``entry_lint.lint_entry``: no DECIMAL column, nested or not (the
+driver's canonicalizer has never hashed a cross-engine DECIMAL equal,
 and the local oracle harness str()s Decimals identically on both sides
-so it can NEVER catch the class.  Red-team case plants a DECIMAL frame
-and demands a hit; the registry sweep demands zero."""
+so it can never catch the class), and no array/map/struct column.
+The registry walk is the ``registry_lint`` fixture (tests/entry_lint.py)."""
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from northwind_etl_spark.plans.queries import QUERIES
-
-from .schema_lint import decimal_output_columns
+from .entry_lint import lint_entry
 
 
-def test_registry_emits_no_decimal(spark, sf_dir):
-    bad = {}
-    for name, fn in QUERIES.items():
-        hits = decimal_output_columns(fn(spark, sf_dir))
-        if hits:
-            bad[name] = hits
-    assert not bad, (
-        f"DECIMAL output columns (driver has never hash-greenlit one; "
-        f"release via one final cast to DOUBLE or scaled BIGINT): {bad}"
-    )
+def test_registry_emits_no_decimal(registry_lint):
+    hits = registry_lint[0]["decimal"]
+    assert not hits, "\n".join(hits)
 
 
 def test_redteam_planted_decimal_flagged(spark):
     planted = spark.range(3).select(
         F.col("id").cast("decimal(38,12)").alias("v")
     )
-    assert decimal_output_columns(planted) == ["v: decimal(38,12)"]
+    assert lint_entry(planted, "planted") == [
+        "planted: DECIMAL output column v: decimal(38,12)"
+    ]
 
 
 def test_redteam_nested_decimal_flagged(spark):
@@ -42,8 +35,13 @@ def test_redteam_nested_decimal_flagged(spark):
             F.lit("k"), F.col("id").cast("decimal(5,1)")
         ).alias("m"),
     )
-    hits = decimal_output_columns(nested)
-    assert hits == ["a[].d: decimal(10,2)", "m<value>: decimal(5,1)"]
+    hits = lint_entry(nested, "nested")
+    assert hits == [
+        "nested: non-scalar output column a: array<struct<d:decimal(10,2)>>",
+        "nested: DECIMAL output column a[].d: decimal(10,2)",
+        "nested: non-scalar output column m: map<string,decimal(5,1)>",
+        "nested: DECIMAL output column m<value>: decimal(5,1)",
+    ]
 
 
 def test_internal_decimal_is_fine_after_final_cast(spark):
@@ -52,4 +50,4 @@ def test_internal_decimal_is_fine_after_final_cast(spark):
         .cast("double")
         .alias("v")
     )
-    assert decimal_output_columns(ok) == []
+    assert lint_entry(ok, "ok") == []
