@@ -17,11 +17,30 @@ path is unaffected: a released stage is recomputed, never wrong.
 ``checkpoint_stage`` is the one lineage truncation every iterative loop
 uses.  Checkpoints are not tracked: a freed checkpoint cannot be
 recomputed, so releasing one would break that contract.
+
+``fixed_point`` is the one loop the iterative graph operators share
+(PageRank, LPA, HITS, k-core, BFS, SSSP, connected components).  It
+owns one rule: after every round, every DataFrame of the carried state
+goes through ``checkpoint_stage`` — truncate when the subtree is the
+cost (OPTIMIZATION_r13 §1).  Without the cut, round k's plan embeds all
+k−1 predecessors and Catalyst re-analyzes the whole chain every round;
+a persist would dedupe execution but keep the subtree.  The checkpoint
+is eager only when a ``done`` probe reads the state that round (the
+checkpoint is then the round's one job and the probe scans its
+blocks); otherwise it is lazy and materializes inside the next round's
+job.  Loop-invariant inputs are the caller's: materialize them once,
+before the loop (tests/iterative_lint.py asserts it) — as a lazy
+checkpoint when rounds join them, for the same reason: a persist
+dedupes execution, but every round would still re-embed its upstream
+plan for Catalyst to re-analyze (a persisted isolated set took LPA's
+committed plan from 578 to 2343 Exchange nodes).
 """
 
 from __future__ import annotations
 
+import itertools
 import threading
+from typing import Callable
 
 from pyspark.sql import DataFrame
 
@@ -60,6 +79,39 @@ def checkpoint_stage(df: DataFrame, *, eager: bool = True) -> DataFrame:
     if df.sparkSession.sparkContext.getCheckpointDir() is not None:
         return df.checkpoint(eager=eager)
     return df.localCheckpoint(eager=eager)
+
+
+State = DataFrame | tuple  # a DataFrame, or a tuple of DataFrames
+
+
+def fixed_point(
+    state: State,
+    step: Callable[[State], State],
+    *,
+    rounds: int | None = None,
+    done: Callable[[State], bool] | None = None,
+) -> State:
+    """Iterate ``state = step(state)`` under the module's truncation
+    rule; stop after exactly ``rounds`` rounds, or at the first state
+    ``done`` accepts.  With ``done``, running out of ``rounds`` raises
+    RuntimeError: a normal return is the convergence certificate."""
+    if rounds is None and done is None:
+        raise ValueError("fixed_point needs rounds, done, or both")
+    eager = done is not None
+    for _ in range(rounds) if rounds is not None else itertools.count():
+        state = step(state)
+        if isinstance(state, tuple):
+            state = tuple(checkpoint_stage(df, eager=eager) for df in state)
+        else:
+            state = checkpoint_stage(state, eager=eager)
+        if done is not None and done(state):
+            return state
+    if done is not None:
+        raise RuntimeError(
+            f"fixed_point: state still changing after {rounds} rounds —"
+            " the input needs more rounds than the bound; raise it"
+        )
+    return state
 
 
 def _drain_all() -> list[DataFrame]:

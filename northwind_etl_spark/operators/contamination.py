@@ -26,6 +26,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.texttools import shingles_expr
+from ..session import repartition_width
 
 
 def cross_corpus_overlap(
@@ -41,7 +42,7 @@ def cross_corpus_overlap(
     """(train_id, eval_id, n_shared) for pairs sharing ≥ min_shared
     distinct word-n-gram shingles.  Exact set semantics (shingles_expr
     is distinct per doc) — fully SQL-oracle-checkable."""
-    par = train.sparkSession.sparkContext.defaultParallelism
+    par = repartition_width(train.sparkSession)
     tr = train.repartition(par, F.col(id_col)).select(
         F.col(id_col).alias("train_id"),
         F.explode(shingles_expr(F.col(text_col), shingle_n)).alias("shingle"),

@@ -29,6 +29,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
 from ..cache import persist_stage
+from ..session import repartition_width
 
 
 def char_ngrams_expr(s: Column, n: int = 3) -> Column:
@@ -75,7 +76,7 @@ def _blocked_candidates(
     """Shared blocking stage: returns (base, cands) where base is the
     persisted (id, __name) projection and cands the distinct (id_a,
     id_b) candidate pairs sharing ≥1 sub-max_df character n-gram."""
-    par = df.sparkSession.sparkContext.defaultParallelism
+    par = repartition_width(df.sparkSession)
     norm = F.lower(F.trim(F.col(text_col)))
     # tiny (id, name) projection consumed by three branches (gram
     # explode + both verify joins) — persist, same policy as the

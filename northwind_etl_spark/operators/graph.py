@@ -7,8 +7,8 @@ jobs at 100 TB:
 - **Iterative lineage.** PageRank is a loop of (join ranks⋈edges →
   groupBy dst) rounds; without checkpointing, round k's plan contains
   all k-1 predecessors and the scheduler DAG grows quadratically.
-  The loop here checkpoints every `checkpoint_every` rounds
-  (`cache.checkpoint_stage`, the one truncation every loop uses).
+  Every loop here runs through `cache.fixed_point`, which truncates
+  each round's state (`cache.checkpoint_stage`).
 - **Wedge explosion.** Enumerating triangles from raw adjacency does
   Σ deg(v)² work; orienting every edge from its lower-(degree, id)
   endpoint to the higher one first bounds per-node fan-out by
@@ -50,7 +50,6 @@ def pagerank_fixed_point(
     iterations: int = 8,
     damping: tuple[int, int] = (85, 100),
     scale: int = 10**12,
-    checkpoint_every: int = 4,
 ) -> DataFrame:
     """PageRank over a directed edge list, exact in scaled integers.
 
@@ -60,19 +59,15 @@ def pagerank_fixed_point(
 
     Returns (node, rank) with rank a BIGINT in units of 1/scale.
     """
-    from ..cache import checkpoint_stage, persist_stage
+    from ..cache import checkpoint_stage, fixed_point, persist_stage
 
     num, den = damping
     e = edges.select(
         F.col(src_col).alias("src"), F.col(dst_col).alias("dst")
     )
-    # Everything loop-invariant is joined ONCE and materialized: the
-    # edge list already carries its source's out-degree.  edges_od is
-    # checkpointed rather than persisted (r13): the loop joins it
-    # every round, and a persist dedupes execution but still re-embeds
-    # the full upstream plan per round for Catalyst to re-analyze —
-    # the checkpoint splices in a scan.  nodes is consumed exactly
-    # once (the output zero-fill) and needs no barrier at all now.
+    # Loop-invariant, so joined ONCE and materialized (cache.py's
+    # rule): the edge list already carries its source's out-degree.
+    # nodes is consumed once (the output zero-fill) and needs no barrier.
     e = persist_stage(e)
     nodes = (
         e.select(F.col("src").alias("node"))
@@ -87,28 +82,22 @@ def pagerank_fixed_point(
         return nodes.select(
             "node", F.lit(scale).cast("long").alias("rank")
         )
-    # r13 optimization round (guide §2.4 — remove exchanges, the HITS
-    # treatment): the loop used to materialize the DENSE rank relation
-    # every round (ranks⋈edges join + a nodes zero-fill join).  Only
-    # the in-mass m_k(v) = Σ_{u→v} rank_{k−1}(u) DIV od(u) varies —
-    # and rank_{k−1}(u) = base + (num·coalesce(m_{k−1}(u), 0)) DIV den
-    # is a pure per-edge expression of the SPARSE m relation (a node
-    # absent from m has mass 0, so the left join supplies exactly the
-    # zero-fill).  Each round is therefore ONE left join + one groupBy
-    # instead of two joins + one groupBy, round 1 needs no join at all
-    # (rank_0 = scale for every node), and `nodes` leaves the loop
-    # entirely — zeros are filled ONCE on output.  Every step is the
-    # identical long DIV/·/Σ arithmetic, so the result is
-    # bit-identical (pinned by tests/test_graph.py and the
-    # nation_trade_pagerank oracle).
+    # The state is the SPARSE in-mass m_k(v) = Σ_{u→v} rank_{k−1}(u)
+    # DIV od(u): rank_{k−1}(u) = base + (num·coalesce(m_{k−1}(u), 0))
+    # DIV den is a per-edge expression of m (a node absent from m has
+    # mass 0, so the left join supplies the zero-fill).  Each round is
+    # ONE left join + one groupBy, round 1 needs no join (rank_0 =
+    # scale), and zeros are filled once on output — the dense
+    # recurrence's exact arithmetic (tests/test_graph.py's reference).
     m = edges_od.groupBy(F.col("dst").alias("node")).agg(
         F.sum(F.expr(f"{scale}L DIV od")).alias("m")
     )
     contrib = F.expr(
         f"(({base}L + (({num} * coalesce(m, 0L)) DIV {den})) DIV od)"
     )
-    for i in range(1, iterations):
-        m = (
+
+    def step(m: DataFrame) -> DataFrame:
+        return (
             edges_od.join(
                 m.withColumnRenamed("node", "__mn"),
                 F.col("src") == F.col("__mn"),
@@ -117,8 +106,8 @@ def pagerank_fixed_point(
             .groupBy(F.col("dst").alias("node"))
             .agg(F.sum(contrib).alias("m"))
         )
-        if (i + 1) % checkpoint_every == 0 and i + 1 < iterations:
-            m = checkpoint_stage(m)
+
+    m = fixed_point(m, step, rounds=iterations - 1)
     return nodes.join(
         m.withColumnRenamed("node", "__mn"),
         F.col("node") == F.col("__mn"),
@@ -237,9 +226,6 @@ def bfs_hops(
     source,
     src_col: str = "src",
     dst_col: str = "dst",
-    *,
-    max_depth: int | None = None,
-    checkpoint_every: int = 4,
 ) -> DataFrame:
     """Single-source shortest HOP distances by frontier BFS — the
     third iterative-graph shape next to pointer-jumping (connected
@@ -250,10 +236,8 @@ def bfs_hops(
     Catalyst/AQE broadcasts it), distinct, then LEFT ANTI against
     visited (first arrival IS the shortest hop count, since every
     level-d node is emitted before any level-d+1 node).  Rounds are
-    bounded by the graph's diameter; each round's frontier is
-    checkpointed (it seeds the next join), and the visited union
-    chain is compacted every `checkpoint_every` rounds — the
-    duplicate_clusters lineage discipline.
+    bounded by the graph's diameter: the loop stops at the first empty
+    frontier.
 
     Exactness: hop counts are small integers — bit-identical in any
     engine replaying the same reachability (the DuckDB oracle closes
@@ -262,38 +246,33 @@ def bfs_hops(
 
     Returns (node, hops) with hops an INT, source at hops=0.
     """
-    from ..cache import checkpoint_stage, persist_stage
+    from ..cache import fixed_point, persist_stage
 
     spark = edges.sparkSession
     e = persist_stage(
         edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
     )
-    frontier = checkpoint_stage(
-        spark.range(1).select(
-            F.lit(source).alias("node"), F.lit(0).cast("int").alias("hops")
-        )
+    start = spark.range(1).select(
+        F.lit(source).alias("node"), F.lit(0).cast("int").alias("hops")
     )
-    visited = frontier
-    d = 0
-    while True:
-        d += 1
-        if max_depth is not None and d > max_depth:
-            break
-        nxt = (
+
+    # The state is (frontier, every level before it): the union runs
+    # here, over two checkpointed scans, so the frontier's join is not
+    # computed a second time inside the visited set's checkpoint.
+    def step(state: tuple) -> tuple:
+        frontier, before = state
+        visited = before.unionByName(frontier)
+        new = (
             frontier.join(e, frontier["node"] == e["src"])
-            .select(F.col("dst").alias("node"))
+            .select(F.col("dst").alias("node"), (F.col("hops") + 1).alias("hops"))
             .distinct()
-            .withColumn("hops", F.lit(d).cast("int"))
+            .join(visited.select("node"), "node", "left_anti")
         )
-        new = checkpoint_stage(
-            nxt.join(visited.select("node"), "node", "left_anti")
-        )
-        if new.isEmpty():
-            break
-        visited = visited.union(new)
-        if d % checkpoint_every == 0:
-            visited = checkpoint_stage(visited)
-        frontier = new
+        return new, visited
+
+    _, visited = fixed_point(
+        (start, start.limit(0)), step, done=lambda s: s[0].isEmpty()
+    )
     return visited
 
 
@@ -303,21 +282,15 @@ def sssp_weighted(
     src_col: str = "src",
     dst_col: str = "dst",
     weight_col: str = "w",
-    *,
-    max_rounds: int | None = None,
 ) -> DataFrame:
     """Weighted single-source shortest paths by distributed
     Bellman-Ford — the min-plus companion to `bfs_hops`: per round,
     every reached node relaxes its out-edges (one keyed join), and
     dist' = MIN per node over {dist} ∪ {relaxations} (one groupBy).
     Stops at the first round that improves nothing; rounds are bounded
-    by |V|−1 for non-negative integer weights.
-
-    The dist relation is O(|V|) rows and is consumed TWICE per round
-    (the fixed-point check and the next relax), so it is
-    checkpointed every round — unlike pagerank's every-k policy,
-    leaving it lazy here re-executes the whole inter-checkpoint chain
-    once per consumer (measured 8 s → 2 s at sf0.001).
+    by |V|−1 for non-negative integer weights.  The same aggregation
+    flags each node that is new or cheaper than last round, so the
+    convergence probe only scans the checkpointed rows.
 
     Exactness: costs are BIGINT sums of integer weights — min-plus has
     no rounding, so any engine replaying the same recurrence matches
@@ -327,7 +300,7 @@ def sssp_weighted(
     a ≥diameter unroll equals the early-stopped loop).  Unreachable
     nodes are absent.  Returns (node, cost).
     """
-    from ..cache import checkpoint_stage, persist_stage
+    from ..cache import fixed_point, persist_stage
 
     spark = edges.sparkSession
     e = persist_stage(
@@ -337,16 +310,11 @@ def sssp_weighted(
             F.col(weight_col).cast("long").alias("w"),
         )
     )
-    dist = checkpoint_stage(
-        spark.range(1).select(
-            F.lit(source).alias("node"), F.lit(0).cast("long").alias("cost")
-        )
+    start = spark.range(1).select(
+        F.lit(source).alias("node"), F.lit(0).cast("long").alias("cost")
     )
-    rounds = 0
-    while True:
-        rounds += 1
-        if max_rounds is not None and rounds > max_rounds:
-            break
+
+    def step(dist: DataFrame) -> DataFrame:
         # rename before joining: after round 1 dist derives from e, so
         # qualified refs (dist["cost"], e["w"]) become ambiguous
         relax = (
@@ -356,23 +324,29 @@ def sssp_weighted(
             .select(
                 F.col("dst").alias("node"),
                 (F.col("__dc") + F.col("w")).alias("cost"),
+                F.lit(None).cast("long").alias("__old"),
             )
         )
-        new = checkpoint_stage(
-            dist.union(relax).groupBy("node").agg(F.min("cost").alias("cost"))
-        )
-        # fixed point: nothing improved and nothing newly reached
-        improved = (
-            new.join(dist.withColumnRenamed("cost", "__old"), "node", "left")
-            .where(
-                F.col("__old").isNull() | (F.col("cost") < F.col("__old"))
+        # __old is the node's previous cost (NULL when newly reached)
+        return (
+            dist.select("node", "cost", F.col("cost").alias("__old"))
+            .unionByName(relax)
+            .groupBy("node")
+            .agg(F.min("cost").alias("cost"), F.min("__old").alias("__old"))
+            .select(
+                "node",
+                "cost",
+                (F.col("__old").isNull() | (F.col("cost") < F.col("__old")))
+                .alias("__changed"),
             )
-            .isEmpty()
         )
-        prev, dist = dist, new
-        if improved:
-            return prev  # new == prev at the fixed point
-    return dist
+
+    dist = fixed_point(
+        start,
+        step,
+        done=lambda d: d.where(F.col("__changed")).limit(1).count() == 0,
+    )
+    return dist.drop("__changed")
 
 
 def label_propagation(
@@ -381,7 +355,6 @@ def label_propagation(
     dst_col: str = "dst",
     *,
     iterations: int = 4,
-    checkpoint_every: int = 2,
 ) -> DataFrame:
     """SYNCHRONOUS label propagation (Raghavan et al. 2007) — the
     fourth iterative-graph shape here (mode-of-neighbors fixed
@@ -408,45 +381,29 @@ def label_propagation(
     11.4 s → 5.7 s at sf0.1).
 
     Per round: one join on the label relation + the count/argmax
-    aggregation pair fused on one shuffle, then a left join back for
-    isolated nodes; checkpoint every `checkpoint_every` rounds
-    (the duplicate_clusters lineage discipline).  At 100 TB each
-    round is keyed shuffles of the label/count relations (O(|V|) and
-    O(|V|·labels-seen) rows) against the edge relation; skew follows
-    in-degree skew, which the count aggregation absorbs map-side.
+    aggregation pair fused on one shuffle, then a union with the
+    isolated nodes (`cache.fixed_point` truncates each round).  At
+    100 TB each round is keyed shuffles of the label/count relations
+    (O(|V|) and O(|V|·labels-seen) rows) against the edge relation;
+    skew follows in-degree skew, which the count aggregation absorbs
+    map-side.
     """
-    from ..cache import checkpoint_stage
+    from ..cache import checkpoint_stage, fixed_point
 
     s, d = F.col(src_col), F.col(dst_col)
-    # The edge relation is loop-invariant and joined EVERY round —
-    # materialize it once (the pagerank/triangles/BFS/SSSP discipline;
-    # forgetting this re-derived a 5-table upstream join per round and
-    # made nation_trade_communities the slowest query in the sf0.1
-    # bench, 23 s vs its siblings' single digits).  checkpoint
-    # rather than persist (r13): the persist deduped execution, but
-    # every round's join still re-embedded the full upstream plan for
-    # Catalyst to re-analyze; the checkpoint splices in a scan.
+    # Loop-invariant and joined EVERY round: materialized once
+    # (cache.py's rule; forgetting it made nation_trade_communities
+    # 23 s in the sf0.1 bench vs its siblings' single digits).
     e = checkpoint_stage(edges.select(s.alias("__s"), d.alias("__d")), eager=False)
     nodes = (
         e.select(F.col("__s").alias("node"))
         .union(e.select("__d"))
         .distinct()
     )
-    # r13 optimization round (guide §2.4 — remove exchanges, the HITS
-    # treatment): the loop used to LEFT-JOIN every round's argmax back
-    # onto the full label relation just to carry nodes with no
-    # in-neighbor.  But that set is LOOP-INVARIANT (a node `pick`
-    # never covers keeps its initial label — its own id — forever),
-    # so it is computed once up front and UNIONed onto each round's
-    # argmax instead: one join per round gone, and the union is
-    # exchange-free.  Same (node, label) set every round — pinned by
-    # tests/test_graph.py and the nation_trade_communities oracle.
-    # checkpoint, not persist: a persist dedupes EXECUTION but
-    # every round's union would still re-embed (and Catalyst would
-    # re-analyze) the full upstream subtree — the committed plans
-    # showed 578 → 2343 Exchange nodes before this truncation; the
-    # checkpoint makes each union splice in a scan (lazy: it
-    # materializes inside round 1's job).
+    # A node with no in-neighbor keeps its own label forever: that set
+    # is loop-invariant, so it is materialized once and UNIONed onto
+    # each round's argmax (exchange-free) instead of left-joining the
+    # argmax back onto every label (tests/test_graph.py's reference).
     isolated = checkpoint_stage(
         nodes.join(
             e.select(F.col("__d").alias("node")).distinct(),
@@ -455,8 +412,8 @@ def label_propagation(
         ).withColumn("label", F.col("node")),
         eager=False,
     )
-    labels = nodes.withColumn("label", F.col("node"))
-    for i in range(iterations):
+
+    def step(labels: DataFrame) -> DataFrame:
         pick = (
             e.join(labels.withColumnRenamed("node", "__s"), "__s")
             .groupBy(F.col("__d").alias("node"), "label")
@@ -465,10 +422,11 @@ def label_propagation(
             .agg(F.max(F.struct("__c", "label")).alias("__b"))
             .select("node", F.col("__b.label").alias("label"))
         )
-        labels = pick.unionByName(isolated)
-        if (i + 1) % checkpoint_every == 0 and i + 1 < iterations:
-            labels = checkpoint_stage(labels)
-    return labels
+        return pick.unionByName(isolated)
+
+    return fixed_point(
+        nodes.withColumn("label", F.col("node")), step, rounds=iterations
+    )
 
 
 def k_core(
@@ -496,37 +454,34 @@ def k_core(
     Returns (node, deg): the surviving nodes with their degree inside
     the surviving subgraph.  Loop discipline: the base edge relation
     is persisted ONCE (the iterative-lint rule); the shrinking edge
-    set is checkpointed per round (it seeds the next join, the
-    BFS lineage rule).  At 100 TB each round is one count shuffle +
-    two semi-joins on the (shrinking) edge relation; skew follows
-    degree skew, absorbed map-side by the count aggregation.
+    set is the `cache.fixed_point` state.  At 100 TB each round is one
+    count shuffle + two semi-joins on the (shrinking) edge relation;
+    skew follows degree skew, absorbed map-side by the count
+    aggregation.
     """
-    from ..cache import checkpoint_stage, persist_stage
+    from ..cache import fixed_point, persist_stage
 
     if k < 1:
         raise ValueError("k must be >= 1")
-    cur = persist_stage(
-        edges.select(
-            F.col(src_col).alias("__s"), F.col(dst_col).alias("__d")
-        )
-    )
-    for _ in range(rounds):
+
+    def step(cur: DataFrame) -> DataFrame:
         deg = cur.groupBy(F.col("__s").alias("node")).agg(
             F.count(F.lit(1)).alias("deg")
         )
         keep = deg.where(F.col("deg") >= k).select("node")
-        # LAZY checkpoint (r13, guide §1.2: each eager checkpoint
-        # was its own blocking job — 4 rounds cost 9 jobs).  The lazy
-        # form still truncates lineage and materializes exactly once,
-        # but it does so INSIDE the next round's degree job (or the
-        # final aggregation), halving the loop's job count.  No
-        # convergence probe reads these blocks mid-round (unlike
-        # duplicate_clusters), so laziness is safe here.
-        cur = checkpoint_stage(
-            cur.join(keep.withColumnRenamed("node", "__s"), "__s", "leftsemi")
-            .join(keep.withColumnRenamed("node", "__d"), "__d", "leftsemi"),
-            eager=False,
-        )
+        return cur.join(
+            keep.withColumnRenamed("node", "__s"), "__s", "leftsemi"
+        ).join(keep.withColumnRenamed("node", "__d"), "__d", "leftsemi")
+
+    cur = fixed_point(
+        persist_stage(
+            edges.select(
+                F.col(src_col).alias("__s"), F.col(dst_col).alias("__d")
+            )
+        ),
+        step,
+        rounds=rounds,
+    )
     return (
         cur.groupBy(F.col("__s").alias("node"))
         .agg(F.count(F.lit(1)).cast("long").alias("deg"))
@@ -540,7 +495,6 @@ def hits_fixed_point(
     dst_col: str = "dst",
     *,
     iterations: int = 4,
-    max_nodes: int | None = None,
 ) -> DataFrame:
     """HITS hubs-and-authorities (Kleinberg 1999) over a directed edge
     list, exact in UNNORMALIZED integers — the PageRank discipline
@@ -560,30 +514,24 @@ def hits_fixed_point(
 
     Overflow contract: unnormalized scores grow like ‖AᵀA‖^k, bounded
     by N^(2k), so the node cap is DERIVED from `iterations` —
-    max_nodes = floor(2^(62/(2k))) (215 at the default 4 rounds; an
-    explicit max_nodes may only tighten it) — and enforced by an
-    IN-PLAN raise (the cusum guard pattern — node count is
-    data-dependent, so a silent overflow would corrupt the hash, not
+    max_nodes = floor(2^(62/(2k))) (215 at the default 4 rounds) — and
+    enforced by an IN-PLAN raise (the cusum guard pattern — node count
+    is data-dependent, so a silent overflow would corrupt the hash, not
     crash).  HITS on an UNBOUNDED-key graph at 100 TB needs the
     normalized float variant (rows-only contract); this operator's
     domain is bounded-dimension graphs (nations, categories, hosts).
 
-    Each round is two (join + groupBy) passes over the persisted edge
-    relation; loop-invariant edges persist ONCE (iterative-lint rule).
+    Each round is two (join + groupBy) passes over the checkpointed
+    edge relation; the (hubs, auths) pair is the `cache.fixed_point`
+    state.
     Returns (node, hub, auth) — BIGINTs after `iterations` rounds.
     """
-    from ..cache import checkpoint_stage, persist_stage
+    from ..cache import checkpoint_stage, fixed_point, persist_stage
 
     if iterations < 1:
         raise ValueError("iterations must be >= 1")
-    derived = int(2 ** (62 / (2 * iterations)))
-    max_nodes = derived if max_nodes is None else min(int(max_nodes), derived)
-    # checkpoint, not persist, for the loop-joined edge relation
-    # (r13): the persist deduped execution but every round still
-    # re-embedded the upstream plan text twice for Catalyst to
-    # re-analyze — the checkpoint splices in a scan (committed plans:
-    # 908 Exchange nodes after the r12 sparse rewrite, single digits
-    # once truncated).
+    max_nodes = int(2 ** (62 / (2 * iterations)))
+    # loop-invariant, joined twice per round: materialized once
     e = checkpoint_stage(
         edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst")),
         eager=False,
@@ -612,17 +560,12 @@ def hits_fixed_point(
         )
         .alias("hub"),
     )
-    # r12 optimization round (guide §2.4 — remove exchanges): the loop
-    # used to zero-fill BOTH score relations against `nodes` every
-    # round (2 extra joins × iterations).  A node absent from a score
-    # relation has score 0, and a 0 score contributes exactly nothing
-    # to the next round's sums (the join against `e` drops the row ⇔
-    # adding 0), so the recursion is bit-identical over the SPARSE
-    # relations; zeros are filled ONCE on output.  The unrolled plan
-    # shrinks from ~16 joins to ~8, halving the per-round AQE
-    # replanning and micro-job count this entry's latency is made of.
-    auths = None
-    for i in range(iterations):
+    # SPARSE scores: a node absent from a score relation has score 0,
+    # which adds nothing to the next round's sums (the join against
+    # `e` drops the row ⇔ adding 0), so no round zero-fills against
+    # `nodes`; zeros are filled ONCE on output.
+    def step(state: tuple) -> tuple:
+        hubs, _ = state
         auths = (
             hubs.join(e, F.col("node") == F.col("src"))
             .groupBy(F.col("dst").alias("node"))
@@ -633,9 +576,9 @@ def hits_fixed_point(
             .groupBy(F.col("src").alias("node"))
             .agg(F.sum("auth").alias("hub"))
         )
-        if (i + 1) % 2 == 0 and i + 1 < iterations:
-            hubs = checkpoint_stage(hubs)
-            auths = checkpoint_stage(auths)
+        return hubs, auths
+
+    hubs, auths = fixed_point((hubs, None), step, rounds=iterations)
     ha = hubs.withColumnRenamed("node", "__hn")
     aa = auths.withColumnRenamed("node", "__an")
     return (

@@ -42,6 +42,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.arrays import lit_long_array
+from ..session import repartition_width
 
 # monotonically_increasing_id = partition index << 33 | record number
 _RECORD_BITS = (1 << 33) - 1
@@ -74,7 +75,7 @@ def global_row_number(
     from ..cache import persist_stage
 
     cols = [F.col(c) if isinstance(c, str) else c for c in order_cols]
-    p = partitions or df.sparkSession.sparkContext.defaultParallelism
+    p = partitions or repartition_width(df.sparkSession)
     # persisted: the counts action and the ranking plan must see the
     # SAME range split and local numbering (the range exchange runs
     # once, and the nondeterministic record counter is fixed)
@@ -132,7 +133,7 @@ def global_running_sum(
             " offset channel"
         )
     cols = [F.col(c) if isinstance(c, str) else c for c in order_cols]
-    p = partitions or df.sparkSession.sparkContext.defaultParallelism
+    p = partitions or repartition_width(df.sparkSession)
     local = F.sum(value_col).over(
         Window.partitionBy("__pid")
         .orderBy(*cols)

@@ -26,6 +26,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..session import repartition_width
+
 
 def half_sample_members(key: Column, b: Column) -> Column:
     """Deterministic membership bit for (row key, replica b): the
@@ -57,7 +59,7 @@ def half_sample_means(
     # are single-row-group files — one task does ×64 the work).  One
     # cheap shuffle of the pre-explode (key, value) pairs decouples
     # the operator from layout and from the table-cache opt-in.
-    par = df.sparkSession.sparkContext.defaultParallelism
+    par = repartition_width(df.sparkSession)
     b = F.explode(F.sequence(F.lit(0), F.lit(replicas - 1))).alias("b")
     exploded = (
         df.select(F.col(key_col).alias("__k"), F.col(value_col).alias("__v"))

@@ -50,6 +50,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..session import repartition_width
+
 
 def skyline_2d(
     df: DataFrame,
@@ -67,7 +69,7 @@ def skyline_2d(
     base = df.where(x.isNotNull() & y.isNotNull())
     ym = base.groupBy(x_col).agg(F.max(y_col).alias("__ymax"))
 
-    p = partitions or spark.sparkContext.defaultParallelism
+    p = partitions or repartition_width(spark)
     # local prefix max over strictly-larger x within the partition
     w = (
         Window.partitionBy("__pid")

@@ -20,6 +20,7 @@ from ..functions.texttools import (
     token_count_expr,
     tokens_expr,
 )
+from ..session import repartition_width
 
 # Function words per language, used as evidence by lang_id.  Tie-break =
 # this dict's order (en, de, fr, es, zh) — encoded in the CASE cascade.
@@ -230,7 +231,7 @@ def _doc_tokens(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     cores (test parquet is one row group) and pre-clusters by id so
     downstream per-doc aggregations are exchange-free.
     """
-    par = df.sparkSession.sparkContext.defaultParallelism
+    par = repartition_width(df.sparkSession)
     return persist_stage(
         df.repartition(par, F.col(id_col))
         .select(F.col(id_col), tokens_expr(F.col(text_col)).alias("__toks"))

@@ -30,6 +30,8 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..session import repartition_width
+
 _UNIT_INTERVAL = {
     "hour": "INTERVAL 1 HOUR",
     "day": "INTERVAL 1 DAY",
@@ -315,7 +317,7 @@ def lttb_downsample(
         if carry is not None and len(carry):
             yield process(carry)
 
-    par = df.sparkSession.sparkContext.defaultParallelism
+    par = repartition_width(df.sparkSession)
     arranged = (
         df.select(*cols)
         .repartition(par, F.col(key_col))

@@ -4383,9 +4383,7 @@ def nation_trade_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     algorithm with exact cross-engine evidence: 4 fixed synchronous
     delete-degree-<k rounds (k=2), which the oracle unrolls as
     identical CTEs.  Fixed point on this fixture is pinned in
-    tests/test_graph.py (round 4 == round 5).  Base edges persisted
-    once (the iterative-lint rule), shrinking edge set
-    localCheckpointed per round (the BFS lineage rule)."""
+    tests/test_graph.py (round 4 == round 5)."""
     from ..operators.graph import k_core
 
     pairs = _nation_trade_pairs(spark, sf_dir)

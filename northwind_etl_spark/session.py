@@ -149,3 +149,12 @@ def harden(spark: SparkSession) -> SparkSession:
     # Results are partition-count independent; only task overhead moves.
     spark.conf.set("spark.sql.shuffle.partitions", str(DEFAULT_SHUFFLE_PARTITIONS))
     return spark
+
+
+def repartition_width(spark: SparkSession) -> int:
+    """Partition count for an explicit repartition: the session's
+    parallelism, but at least 2.  A 1-partition repartition plans as
+    ``Exchange SinglePartition``, which funnels every row into one task
+    at any input size (and trips the single-partition lint), so a
+    1-core session would run these stages as a funnel."""
+    return max(2, spark.sparkContext.defaultParallelism)

@@ -20,7 +20,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
-from ..session import harden
+from ..session import harden, repartition_width
 
 TABLE_NAMES = [
     "region",
@@ -71,7 +71,7 @@ def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         key = (spark.sparkContext.applicationId, sf_dir, name)
         if key not in _cache:
             df = _read_table_raw(spark, sf_dir, name)
-            par = spark.sparkContext.defaultParallelism
+            par = repartition_width(spark)
             _cache[key] = df.repartition(par).cache()
         return _cache[key]
     return _read_table_raw(spark, sf_dir, name)

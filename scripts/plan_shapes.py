@@ -29,8 +29,9 @@ def main() -> None:
     spark = get_spark("northwind-etl-spark-tests")
     spark.sparkContext.setLogLevel("ERROR")
     if spark.sparkContext.defaultParallelism < 2:
-        # repartition(defaultParallelism) plans as one partition there,
-        # and the exchanges that partition makes redundant disappear
+        # a 1-partition input already satisfies an aggregate's
+        # distribution there, so some exchanges disappear
+        # (bloom_fpr_eval's ShuffleExchange count moves)
         sys.exit("plan shapes are pinned from 2 cores up; set SPARK_GRAFT_CPUS >= 2")
     shapes = {name: plan_shape(df) for name, df in registry_entries(spark, SF_DIR)}
     write_ledger(SF_DIR, shapes)

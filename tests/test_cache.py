@@ -1,6 +1,6 @@
-"""Tracked persist + release for shared multi-consumer stages, and
+"""Tracked persist + release for shared multi-consumer stages,
 checkpoint_stage's switch to fault-tolerant checkpoints when the
-session has a checkpoint dir (cache.py).
+session has a checkpoint dir, and the fixed_point loop (cache.py).
 """
 
 from __future__ import annotations
@@ -8,7 +8,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from northwind_etl_spark.cache import persist_stage, release_stages
+from northwind_etl_spark.cache import fixed_point, persist_stage, release_stages
 from northwind_etl_spark.operators import graph as G
 from northwind_etl_spark.operators.bpe import _persistent_rdd_ids
 from northwind_etl_spark.operators.dedup import duplicate_clusters
@@ -99,6 +99,7 @@ def test_loops_with_checkpoint_dir_match_local(spark, checkpoint_dir):
             G.bfs_hops(edges, "a"),
             G.k_core(edges, k=2, rounds=3),
             G.hits_fixed_point(edges, iterations=4),
+            G.sssp_weighted(edges.withColumn("w", F.lit(1)), "a"),
             duplicate_clusters(pairs),
         ]
         return [sorted(map(tuple, df.collect())) for df in outs]
@@ -108,3 +109,36 @@ def test_loops_with_checkpoint_dir_match_local(spark, checkpoint_dir):
     _clear_checkpoint_dir(sc)
     assert with_dir == run_all()
     release_stages()  # the loops' persisted edge stages
+
+
+
+def _counter(spark):
+    """(start state x=0, step adding 1 to x, list of rounds stepped)."""
+    stepped = []
+
+    def step(df):
+        stepped.append(len(stepped) + 1)
+        return df.select((F.col("x") + 1).alias("x"))
+
+    return spark.range(1).select(F.lit(0).alias("x")), step, stepped
+
+
+def test_fixed_point_stops_at_first_done_round(spark):
+    start, step, stepped = _counter(spark)
+    out = fixed_point(start, step, rounds=10, done=lambda s: s.first().x >= 3)
+    assert out.first().x == 3 and stepped == [1, 2, 3]
+
+
+def test_fixed_point_raises_when_rounds_run_out(spark):
+    start, step, stepped = _counter(spark)
+    with pytest.raises(RuntimeError, match="still changing after 2 rounds"):
+        fixed_point(start, step, rounds=2, done=lambda s: False)
+    assert stepped == [1, 2]
+
+
+def test_fixed_point_runs_exactly_rounds_without_done(spark):
+    start, step, stepped = _counter(spark)
+    a, b = fixed_point((start, start), lambda s: tuple(map(step, s)), rounds=3)
+    assert (a.first().x, b.first().x) == (3, 3) and len(stepped) == 6
+    # every frame of the state is truncated
+    assert "LogicalRDD" in b._jdf.queryExecution().logical().toString()

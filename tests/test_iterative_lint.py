@@ -4,7 +4,11 @@ broken (the r07 label_propagation regression replayed on purpose)."""
 
 from __future__ import annotations
 
-from .iterative_lint import lint_iterative_operators, uncached_relation_leaves
+from .iterative_lint import (
+    lint_cases,
+    lint_iterative_operators,
+    uncached_relation_leaves,
+)
 
 
 def test_iterative_operators_persist_loop_invariants(spark, sf_dir):
@@ -15,7 +19,7 @@ def test_lint_goes_red_when_persist_is_removed(spark, sf_dir, monkeypatch):
     """Red-team the lint: with BOTH materialization disciplines
     no-op'd — persist_stage (the r07 LPA bug shape) and
     localCheckpoint (which r13 moved the loop-invariant truncation
-    to) — the lint MUST flag both loop operators."""
+    to) — the lint MUST flag every linted loop."""
     # patch the CLASSIC DataFrame class — the runtime type in Spark 4
     # (pyspark.sql.DataFrame is the dispatch facade; patching it does
     # not override the classic subclass's own method)
@@ -28,8 +32,8 @@ def test_lint_goes_red_when_persist_is_removed(spark, sf_dir, monkeypatch):
         DataFrame, "localCheckpoint", lambda self, eager=True: self
     )
     failures = lint_iterative_operators(spark, sf_dir)
-    assert any("label_propagation" in f for f in failures)
-    assert any("pagerank_fixed_point" in f for f in failures)
+    flagged = {f.split(":")[0] for f in failures if ": round" in f}
+    assert flagged == set(lint_cases(spark, sf_dir)) and len(flagged) == 7
 
 
 def test_uncached_leaf_counter_sees_through_persist(spark, sf_dir):

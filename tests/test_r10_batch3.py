@@ -1,5 +1,5 @@
 """Planted-fixture semantics for the r10 batch-3 operators (robust
-trend, Kaplan–Meier survival, HITS, URL canonicalization, CUPED, PSI,
+trend, Kaplan–Meier survival, URL canonicalization, CUPED, PSI,
 nDCG, JSD).  Cross-engine value parity is pinned by their registry
 oracles (tests/test_oracle_parity.py); these tests pin BEHAVIOR —
 robustness claims, censoring semantics, guard raises, normalization
@@ -123,40 +123,6 @@ def test_km_negative_duration_raises(spark):
 
     with pytest.raises(Exception, match="negative duration"):
         km_log_survival(_surv_df(spark, [(-1, 1), (2, 1)])).collect()
-
-
-# --------------------------------------------------------------- HITS
-
-
-def test_hits_hand_graph(spark):
-    from northwind_etl_spark.operators.graph import hits_fixed_point
-
-    # u1 -> v, u2 -> v, u2 -> w : v is the big authority, u2 the big hub
-    e = spark.createDataFrame(
-        [("u1", "v"), ("u2", "v"), ("u2", "w")], "src STRING, dst STRING"
-    )
-    got = {
-        r["node"]: (r["hub"], r["auth"])
-        for r in hits_fixed_point(e, iterations=2).collect()
-    }
-    # by hand: a1(v)=2, a1(w)=1; h1(u1)=2, h1(u2)=3;
-    #          a2(v)=5, a2(w)=3; h2(u1)=5, h2(u2)=8
-    assert got == {
-        "u1": (5, 0),
-        "u2": (8, 0),
-        "v": (0, 5),
-        "w": (0, 3),
-    }
-
-
-def test_hits_node_count_guard_raises(spark):
-    from northwind_etl_spark.operators.graph import hits_fixed_point
-
-    e = spark.createDataFrame(
-        [("a", "b"), ("b", "c"), ("c", "a")], "src STRING, dst STRING"
-    )
-    with pytest.raises(Exception, match="nodes > 2"):
-        hits_fixed_point(e, iterations=4, max_nodes=2).collect()
 
 
 # ------------------------------------------------------ canonical URL

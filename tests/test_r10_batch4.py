@@ -231,22 +231,6 @@ def test_cuped_constant_covariate_pins_theta(spark):
     assert out["control"]["mean_adjusted"] == out["control"]["mean_post"]
 
 
-def test_hits_guard_scales_with_iterations(spark):
-    from northwind_etl_spark.operators.graph import hits_fixed_point
-
-    e = spark.createDataFrame(
-        [(f"n{i}", f"n{(i + 1) % 12}") for i in range(12)],
-        "src STRING, dst STRING",
-    )
-    # 12 nodes: fine at 4 iterations (cap 215), over the derived cap
-    # at 9 iterations (2^(62/18) ≈ 10.9 -> cap 10)
-    assert hits_fixed_point(e, iterations=4).count() == 12
-    with pytest.raises(Exception, match="12 nodes > 10"):
-        hits_fixed_point(e, iterations=9).count()
-    with pytest.raises(ValueError, match="iterations"):
-        hits_fixed_point(e, iterations=0)
-
-
 def test_running_sum_rejects_non_integral(spark):
     from northwind_etl_spark.operators.ranking import global_running_sum
 

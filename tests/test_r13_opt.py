@@ -14,7 +14,6 @@ must be result-identical — these tests pin that:
 
 from __future__ import annotations
 
-import os
 import random
 from decimal import Decimal
 
@@ -158,111 +157,6 @@ def test_group_selection_walk_isin_many_groups(spark):
         assert n == len(by_g[g])
         assert k == max(1, math.ceil(qq * n))
         assert v == by_g[g][k - 1]
-
-
-def _dense_pagerank_reference(spark, edges, *, iterations, damping, scale):
-    """The pre-r13 DENSE loop (ranks zero-filled against nodes every
-    round), kept as the reference the sparse rewrite must equal."""
-    num, den = damping
-    e = edges.select("src", "dst")
-    nodes = e.select(F.col("src").alias("node")).union(e.select("dst")).distinct()
-    outdeg = e.groupBy("src").agg(F.count(F.lit(1)).alias("od"))
-    edges_od = e.join(outdeg, "src")
-    base = (scale * (den - num)) // den
-    ranks = nodes.select("node", F.lit(scale).cast("long").alias("rank"))
-    for _ in range(iterations):
-        contribs = (
-            ranks.join(edges_od, F.col("node") == F.col("src"))
-            .groupBy(F.col("dst").alias("node"))
-            .agg(F.sum(F.expr("rank DIV od")).alias("m"))
-        )
-        ranks = nodes.join(contribs, "node", "left").select(
-            "node",
-            (
-                F.lit(base).cast("long")
-                + F.expr(f"({num} * coalesce(m, 0L)) DIV {den}")
-            ).alias("rank"),
-        )
-    return ranks
-
-
-@pytest.mark.parametrize("iterations", [1, 3, 8])
-def test_pagerank_sparse_equals_dense_reference(spark, iterations):
-    """The r13 sparse-mass pagerank must be bit-identical to the old
-    dense loop — including dangling nodes (in-edges only) and source
-    nodes (out-edges only, absent from every m relation)."""
-    edges = spark.createDataFrame(
-        [
-            ("a", "b"), ("b", "c"), ("c", "a"), ("a", "c"),
-            ("d", "a"),            # d: out-only (never in m)
-            ("c", "e"),            # e: dangling (no out-edges)
-            ("f", "e"), ("f", "b"),
-        ],
-        ["src", "dst"],
-    )
-    from northwind_etl_spark.operators.graph import pagerank_fixed_point
-
-    got = sorted(
-        (r["node"], r["rank"])
-        for r in pagerank_fixed_point(
-            edges, iterations=iterations, checkpoint_every=2
-        ).collect()
-    )
-    want = sorted(
-        (r["node"], r["rank"])
-        for r in _dense_pagerank_reference(
-            spark, edges, iterations=iterations,
-            damping=(85, 100), scale=10**12,
-        ).collect()
-    )
-    assert got == want
-
-
-@pytest.mark.parametrize("iterations", [1, 4])
-def test_lpa_union_equals_leftjoin_reference(spark, iterations):
-    """The r13 isolated-union LPA must equal the old per-round
-    left-join form — including a node with NO in-neighbor (directed
-    edge input), which keeps its own label every round."""
-    edges = spark.createDataFrame(
-        [
-            ("a", "b"), ("b", "a"),
-            ("b", "c"), ("c", "b"),
-            ("x", "a"),            # x: no in-edges, out only
-            ("d", "e"), ("e", "d"),
-        ],
-        ["src", "dst"],
-    )
-    from northwind_etl_spark.operators.graph import label_propagation
-
-    got = sorted(
-        (r["node"], r["label"])
-        for r in label_propagation(
-            edges, iterations=iterations, checkpoint_every=2
-        ).collect()
-    )
-
-    # old left-join reference
-    e = edges.select(F.col("src").alias("__s"), F.col("dst").alias("__d"))
-    labels = (
-        e.select(F.col("__s").alias("node"))
-        .union(e.select("__d"))
-        .distinct()
-        .withColumn("label", F.col("node"))
-    )
-    for _ in range(iterations):
-        pick = (
-            e.join(labels.withColumnRenamed("node", "__s"), "__s")
-            .groupBy(F.col("__d").alias("node"), "label")
-            .agg(F.count(F.lit(1)).alias("__c"))
-            .groupBy("node")
-            .agg(F.max(F.struct("__c", "label")).alias("__b"))
-            .select("node", F.col("__b.label").alias("__new"))
-        )
-        labels = labels.join(pick, "node", "left").select(
-            "node", F.coalesce("__new", "label").alias("label")
-        )
-    want = sorted((r["node"], r["label"]) for r in labels.collect())
-    assert got == want
 
 
 def test_simhash_expr_rewrite_identical(spark):
