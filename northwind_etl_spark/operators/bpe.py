@@ -20,7 +20,7 @@ Why this shape survives 100 TB:
   a just-merged tail can no longer equal `left`, so the fold cannot
   double-consume a symbol — it reproduces the reference greedy scan
   exactly (a run a,a,a merges to (aa),a, not a,(aa));
-- lineage is truncated by localCheckpoint every `checkpoint_every`
+- lineage is truncated by localCheckpoint every `CHECKPOINT_EVERY`
   iterations (same discipline as operators/dedup.py::duplicate_clusters
   — without it the symbol column's plan grows by one fold per merge
   and the optimizer chokes long before 100 iterations).
@@ -50,6 +50,8 @@ __all__ = ["learn_bpe_merges", "bpe_word_types", "encode_with_merges"]
 # separator used for the flattened "left right" pair key; words are
 # whitespace-tokenized so a space can never appear inside a symbol
 PAIR_SEP = chr(32)
+# merges between two lineage truncations of the word-type table
+CHECKPOINT_EVERY = 5
 
 
 def bpe_word_types(df: DataFrame, text_col: str = "text") -> DataFrame:
@@ -179,7 +181,6 @@ def learn_bpe_merges(
     *,
     n_merges: int = 20,
     min_freq: int = 2,
-    checkpoint_every: int = 5,
 ) -> DataFrame:
     """Learn `n_merges` BPE merges over the corpus; returns a DataFrame
     (rank, left, right, merged, pair_count) in merge order.  Stops
@@ -190,40 +191,43 @@ def learn_bpe_merges(
     spark = df.sparkSession
     sc = spark.sparkContext
     types_df = bpe_word_types(df, text_col).persist()
-    types_df.count()  # materialize the one corpus pass
     merges: list[tuple[int, str, str, str, int]] = []
-    current = types_df
     # local checkpoint blocks are NOT tracked by the SQL cache manager
     # and outlive the call until async ContextCleaner GC — track their
     # RDD ids explicitly so (a) at most ONE checkpoint's blocks are
     # ever live (the superseded one is released as soon as its
     # successor materializes) and (b) the session is block-clean on
-    # return instead of "eventually, after GC".
+    # return, also when a round raises, instead of "eventually, after
+    # GC".
     ckpt_ids: set[int] = set()
-    for rank in range(n_merges):
-        top = (
-            _pair_counts(current)
-            .orderBy(F.desc("pair_count"), F.asc("pair"))
-            .limit(1)
-            .collect()
-        )
-        if not top or top[0]["pair_count"] < min_freq:
-            break
-        left, right = top[0]["pair"].split(PAIR_SEP)
-        merges.append(
-            (rank, left, right, left + right, int(top[0]["pair_count"]))
-        )
-        current = _apply_merge(current, left, right)
-        if (rank + 1) % checkpoint_every == 0:
-            before = _persistent_rdd_ids(sc)
-            current = checkpoint_stage(current)  # eager: blocks exist now
-            new_ids = _persistent_rdd_ids(sc) - before
-            _unpersist_rdd_ids(sc, ckpt_ids)
-            ckpt_ids = new_ids
-    # the returned DataFrame is built from the collected merge list, so
-    # nothing references the final checkpoint's blocks — safe to free
-    types_df.unpersist()
-    _unpersist_rdd_ids(sc, ckpt_ids)
+    try:
+        types_df.count()  # materialize the one corpus pass
+        current = types_df
+        for rank in range(n_merges):
+            top = (
+                _pair_counts(current)
+                .orderBy(F.desc("pair_count"), F.asc("pair"))
+                .limit(1)
+                .collect()
+            )
+            if not top or top[0]["pair_count"] < min_freq:
+                break
+            left, right = top[0]["pair"].split(PAIR_SEP)
+            merges.append(
+                (rank, left, right, left + right, int(top[0]["pair_count"]))
+            )
+            current = _apply_merge(current, left, right)
+            if (rank + 1) % CHECKPOINT_EVERY == 0:
+                before = _persistent_rdd_ids(sc)
+                current = checkpoint_stage(current)  # eager: blocks exist now
+                new_ids = _persistent_rdd_ids(sc) - before
+                _unpersist_rdd_ids(sc, ckpt_ids)
+                ckpt_ids = new_ids
+    finally:
+        # the returned DataFrame is built from the collected merge
+        # list, so nothing references the last checkpoint's blocks
+        types_df.unpersist()
+        _unpersist_rdd_ids(sc, ckpt_ids)
     return spark.createDataFrame(
         merges,
         "rank INT, left STRING, right STRING, merged STRING, pair_count BIGINT",

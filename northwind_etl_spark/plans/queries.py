@@ -28,7 +28,7 @@ from ..operators.aggregate import table_count
 from ..operators.derive import revenue_expr
 from ..operators.joins import anti_join_audit
 from ..operators.sort import top_k
-from ..sources.parquet import TABLE_NAMES, read_parquet, read_table
+from ..sources.parquet import TABLE_NAMES, read_table
 from . import star
 from . import tpch as T
 
@@ -1538,100 +1538,6 @@ LATERAL_TOPK_SQL = """
 """
 
 
-_STREAM_SINK_SEQ = iter(range(1, 1 << 30))
-_SPILL_ROOT: list[str] = []
-
-
-def _spill_dir(base_name: str) -> str:
-    """Per-drain parquet spill dir under one session-scoped root that
-    is removed at interpreter exit — bench warmup + reps and repeated
-    driver checks must not accumulate full-result copies in /tmp
-    across rounds.  (The dirs can't be removed eagerly: the returned
-    DataFrame reads them lazily for its whole lifetime.)"""
-    import atexit
-    import shutil
-    import tempfile
-
-    if not _SPILL_ROOT:
-        root = tempfile.mkdtemp(prefix="nes_drain_")
-        atexit.register(shutil.rmtree, root, ignore_errors=True)
-        _SPILL_ROOT.append(root)
-    return tempfile.mkdtemp(prefix=f"{base_name}_", dir=_SPILL_ROOT[0])
-
-
-def _drain_stream(
-    df: DataFrame,
-    base_name: str,
-    *,
-    output_mode: str = "complete",
-    sf_dir: str | None = None,
-    python_stateful: bool = False,
-) -> DataFrame:
-    """availableNow-drain a streaming DataFrame into a uniquely-named
-    memory sink (repeat calls in one session must not collide), spill
-    the result to a temp parquet dir, and FREE the sink.
-
-    Without the spill+drop, every drain leaves its full result pinned
-    in driver memory for the session lifetime (the memory sink holds
-    all rows behind the temp view) — bench reps and repeated driver
-    checks would stack whole-table copies.  The parquet hop keeps the
-    result distributed (no collect) and the returned DataFrame owns
-    its own storage.
-
-    Output-mode contract (the memory sink APPENDS each micro-batch's
-    emitted rows to its table): windowed aggregations must drain in
-    ``complete`` mode — the sink then replaces the table every batch,
-    so a window updated across several micro-batches lands exactly
-    once.  In ``update`` mode the same window would land twice
-    (partial state + final state) as soon as the source splits into
-    >1 batch (multi-file input, maxFilesPerTrigger).  ``append`` is
-    for operators that emit each row exactly once (stream–stream
-    inner joins, dropDuplicatesWithinWatermark, watermark-closed
-    session windows) — correct across any batch split by
-    construction."""
-    import os
-
-    from ..streaming.events_stream import (
-        adaptive_stream_partitions,
-        run_available_now,
-        source_parquet_bytes,
-    )
-
-    # state/shuffle partition count derived from the SOURCE size
-    # (guide §2 scale-adaptivity — streaming has no AQE coalescing;
-    # see adaptive_stream_partitions for the full contract).  The
-    # source may be a single file OR a directory-layout dataset
-    # (ADVICE r12) — source_parquet_bytes handles both; a missing
-    # source keeps the session default (None), except for the
-    # python-stateful floor below.
-    n_parts = None
-    if sf_dir is not None:
-        src_bytes = source_parquet_bytes(
-            os.path.join(sf_dir, "events.parquet")
-        )
-        if src_bytes is not None:
-            n_parts = adaptive_stream_partitions(src_bytes)
-    if python_stateful:
-        # applyInPandasWithState-style operators run their groups
-        # serially per partition inside the Python worker: their
-        # latency is per-key compute, so the partition count must
-        # never drop below the session's actual parallelism — also
-        # when the source size is unknown (at scale the byte-derived
-        # term dominates anyway)
-        n_parts = max(
-            n_parts or 1, df.sparkSession.sparkContext.defaultParallelism
-        )
-    name = f"{base_name}_{next(_STREAM_SINK_SEQ)}"
-    out = run_available_now(
-        df, name, output_mode=output_mode, shuffle_partitions=n_parts
-    )
-    spark = out.sparkSession
-    spill = _spill_dir(base_name)
-    out.write.mode("overwrite").parquet(spill)
-    spark.catalog.dropTempView(name)
-    return read_parquet(spark, spill, schema=out.schema)
-
-
 def stream_tumbling_event_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Tumbling counts computed BY THE STREAMING ENGINE: file-source
     stream → 2 h watermark → windowed count/decimal-sum → availableNow
@@ -1642,11 +1548,17 @@ def stream_tumbling_event_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     how the source splits into batches (complete-mode drain: the sink
     holds exactly the final state table; the decimal sum makes the
     value aggregation order-independent)."""
-    from ..streaming.events_stream import read_events_stream, windowed_counts_stream
+    from ..streaming.events_stream import (
+        events_path,
+        read_events_stream,
+        run_available_now,
+        windowed_counts_stream,
+    )
 
     stream = read_events_stream(spark, sf_dir)
-    return _drain_stream(
-        windowed_counts_stream(stream), "stream_tumbling", sf_dir=sf_dir
+    return run_available_now(
+        windowed_counts_stream(stream), "stream_tumbling",
+        source=events_path(sf_dir), output_mode="complete",
     )
 
 
@@ -1719,14 +1631,16 @@ def stream_two_level_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     hour of an emitted outer window has itself closed, which is why
     the streamed cascade equals the batch rollup exactly."""
     from ..streaming.events_stream import (
+        events_path,
         read_events_stream,
+        run_available_now,
         two_level_window_stream,
     )
 
     stream = read_events_stream(spark, sf_dir)
-    return _drain_stream(
+    return run_available_now(
         two_level_window_stream(stream), "stream_two_level",
-        output_mode="append", sf_dir=sf_dir,
+        source=events_path(sf_dir), output_mode="append",
     )
 
 
@@ -1739,7 +1653,12 @@ def stream_enriched_event_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     browse, signup/purchase → convert, error → other), so the oracle
     is the plain batch CASE rollup; the decimal sum makes the value
     aggregation order-independent across micro-batches."""
-    from ..streaming.events_stream import enrich_with_static, read_events_stream
+    from ..streaming.events_stream import (
+        enrich_with_static,
+        events_path,
+        read_events_stream,
+        run_available_now,
+    )
 
     stream = read_events_stream(spark, sf_dir)
     dim = (
@@ -1758,7 +1677,9 @@ def stream_enriched_event_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).alias("n_events"),
         decimal_sum("value", "total_value"),
     )
-    return _drain_stream(agg, "stream_enrich", sf_dir=sf_dir).orderBy("stage")
+    return run_available_now(
+        agg, "stream_enrich", source=events_path(sf_dir), output_mode="complete"
+    ).orderBy("stage")
 
 
 def stream_click_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1768,14 +1689,16 @@ def stream_click_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     over static input the emitted matches must equal the batch interval
     join exactly — the oracle is the plain SQL range join."""
     from ..streaming.events_stream import (
+        events_path,
         purchase_click_attribution_stream,
         read_events_stream,
+        run_available_now,
     )
 
     stream = read_events_stream(spark, sf_dir)
-    return _drain_stream(
+    return run_available_now(
         purchase_click_attribution_stream(stream), "stream_attr",
-        output_mode="append", sf_dir=sf_dir,
+        source=events_path(sf_dir), output_mode="append",
     )
 
 
@@ -1792,16 +1715,18 @@ def stream_click_attribution_outer(spark: SparkSession, sf_dir: str) -> DataFram
     outer-join subtlety availableNow drains have: rows still in state
     when the drain ends are legitimately absent."""
     from ..streaming.events_stream import (
+        events_path,
         purchase_click_attribution_stream,
         read_events_stream,
+        run_available_now,
     )
 
     stream = read_events_stream(spark, sf_dir)
-    return _drain_stream(
+    return run_available_now(
         purchase_click_attribution_stream(stream, how="left_outer"),
         "stream_attr_outer",
+        source=events_path(sf_dir),
         output_mode="append",
-        sf_dir=sf_dir,
     )
 
 
@@ -1811,13 +1736,18 @@ def stream_dedup_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     event_id → drain.  The oracle is simply the events table: streaming
     dedup must reduce the doubled stream back to exactly the input,
     proving watermark-bounded state yields the batch-exact answer."""
-    from ..streaming.events_stream import read_events_stream, stream_dedup
+    from ..streaming.events_stream import (
+        events_path,
+        read_events_stream,
+        run_available_now,
+        stream_dedup,
+    )
 
     stream = read_events_stream(spark, sf_dir)
     doubled = stream.union(stream)
-    out = _drain_stream(
-        stream_dedup(doubled), "stream_dedup", output_mode="append",
-        sf_dir=sf_dir,
+    out = run_available_now(
+        stream_dedup(doubled), "stream_dedup",
+        source=events_path(sf_dir), output_mode="append",
     )
     # LTZ→NTZ relabel (UTC session) so the schema matches the batch
     # events table the oracle reads
@@ -1833,12 +1763,17 @@ def stream_session_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     BREAKS the session: event windows are half-open [ts, ts+gap)) and
     the emission cutoff (session_end < watermark); trailing sessions
     stay in state by design, precisely what a restart would resume."""
-    from ..streaming.events_stream import read_events_stream, session_window_stream
+    from ..streaming.events_stream import (
+        events_path,
+        read_events_stream,
+        run_available_now,
+        session_window_stream,
+    )
 
     stream = read_events_stream(spark, sf_dir)
-    return _drain_stream(
-        session_window_stream(stream), "stream_sess", output_mode="append",
-        sf_dir=sf_dir,
+    return run_available_now(
+        session_window_stream(stream), "stream_sess",
+        source=events_path(sf_dir), output_mode="append",
     )
 
 
@@ -1850,17 +1785,17 @@ def stream_user_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     monotone, so MAX per user recovers the final state regardless of
     how the source splits into batches; the oracle is the plain batch
     GROUP BY count."""
-    from ..streaming.events_stream import read_events_stream, running_user_counts_stream
+    from ..streaming.events_stream import (
+        events_path,
+        read_events_stream,
+        run_available_now,
+        running_user_counts_stream,
+    )
 
     stream = read_events_stream(spark, sf_dir)
-    # python_stateful: applyInPandasWithState walks its groups
-    # SERIALLY inside each partition's Python worker, so this drain is
-    # per-key-compute-bound, not state-store-overhead-bound — its
-    # partition floor is the session's core count (see
-    # adaptive_stream_partitions' python_stateful contract)
-    out = _drain_stream(
-        running_user_counts_stream(stream), "stream_ruc", output_mode="update",
-        sf_dir=sf_dir, python_stateful=True,
+    out = run_available_now(
+        running_user_counts_stream(stream), "stream_ruc",
+        source=events_path(sf_dir), output_mode="update", python_stateful=True,
     )
     return out.groupBy("user_id").agg(F.max("events_seen").alias("events_seen"))
 
@@ -2118,31 +2053,24 @@ def stream_incremental_user_value(spark: SparkSession, sf_dir: str) -> DataFrame
     The finalized state must equal the plain batch GROUP BY, which is
     the oracle; multi-batch splitting is pinned separately in
     tests/test_streaming.py."""
-    import os
-
     from ..streaming.events_stream import (
-        adaptive_stream_partitions,
+        events_path,
         incremental_state_stream,
         read_events_stream,
         read_incremental_state,
-        source_parquet_bytes,
+        spill_dir,
     )
 
     ev = read_events_stream(spark, sf_dir).select("user_id", "value")
-    root = _spill_dir("stream_incr_state")
-    ckpt = _spill_dir("stream_incr_ckpt")
-    src_bytes = source_parquet_bytes(os.path.join(sf_dir, "events.parquet"))
+    root = spill_dir("stream_incr_state")
+    ckpt = spill_dir("stream_incr_ckpt")
     incremental_state_stream(
         ev,
         root,
         ckpt,
         keys=["user_id"],
         value="value",
-        shuffle_partitions=(
-            adaptive_stream_partitions(src_bytes)
-            if src_bytes is not None
-            else None
-        ),
+        source=events_path(sf_dir),
     )
     return read_incremental_state(spark, root, prefix="value").orderBy("user_id")
 
@@ -2407,6 +2335,20 @@ def bigram_surprisal_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     return X.bigram_surprisal(_t(spark, sf_dir, "documents"))
 
 
+def _md5_band_store(docs: DataFrame) -> DataFrame:
+    """The md5 MinHash band store over `docs` (12 md5 minima of the
+    3-shingles, 4 band keys of 3), persisted: each caller reads it on
+    both sides of the bucket join, and DuckDB replays it value-exact."""
+    from ..cache import persist_stage
+
+    sigs = D.minhash_signatures_md5(
+        docs, "text", "doc_id", num_hashes=12, shingle_n=3
+    )
+    return persist_stage(
+        D.band_keys_md5(sigs, "doc_id", bands=4, num_hashes=12)
+    )
+
+
 def duplicate_cluster_sizes(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Connected components over MinHash near-dup candidate pairs
     (operators/dedup.py::duplicate_clusters — iterative pointer-jumping
@@ -2419,15 +2361,8 @@ def duplicate_cluster_sizes(spark: SparkSession, sf_dir: str) -> DataFrame:
     cross-engine check (planted-transitive-chain tests remain in
     tests/test_dedup_clusters.py; the xxhash production path keeps its
     driver row via minhash_near_dup_pairs)."""
-    from ..cache import persist_stage
-
     docs = _t(spark, sf_dir, "documents")
-    sigs = D.minhash_signatures_md5(
-        docs, "text", "doc_id", num_hashes=12, shingle_n=3
-    )
-    banded = persist_stage(
-        D.band_keys_md5(sigs, "doc_id", bands=4, num_hashes=12)
-    )
+    banded = _md5_band_store(docs)
     pairs = D.delta_candidate_pairs(banded, banded, "doc_id")
     clusters = D.duplicate_clusters(pairs.select("id_a", "id_b"))
     return (
@@ -6648,15 +6583,8 @@ def minhash_delta_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
     dedup family's first HASH-VERIFIED MinHash entry: DuckDB replays
     shingles -> 12 md5 minima -> 4 band keys -> the delta-restricted
     bucket join, value-exact."""
-    from ..cache import persist_stage
-
     docs = _t(spark, sf_dir, "documents")
-    sigs = D.minhash_signatures_md5(
-        docs, "text", "doc_id", num_hashes=12, shingle_n=3
-    )
-    banded = persist_stage(
-        D.band_keys_md5(sigs, "doc_id", bands=4, num_hashes=12)
-    )
+    banded = _md5_band_store(docs)
     delta = banded.where(F.col("doc_id") % 10 >= 8)
     return D.delta_candidate_pairs(banded, delta, "doc_id").orderBy(
         "id_a", "id_b"
@@ -6691,12 +6619,7 @@ def minhash_band_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
             docs, "text", "doc_id", threshold=taus[0], shingle_n=3, max_df=500
         ).select("id_a", "id_b", "jaccard")
     )
-    sigs = D.minhash_signatures_md5(
-        docs, "text", "doc_id", num_hashes=12, shingle_n=3
-    )
-    banded = persist_stage(
-        D.band_keys_md5(sigs, "doc_id", bands=4, num_hashes=12)
-    )
+    banded = _md5_band_store(docs)
     cand = persist_stage(
         D.delta_candidate_pairs(banded, banded, "doc_id").select(
             "id_a", "id_b"
@@ -7158,15 +7081,8 @@ def minhash_erasure_impact(spark: SparkSession, sf_dir: str) -> DataFrame:
     — the incremental-maintenance twin of the delta-ingest path.
     Released: every retained doc that loses >= 1 partner, with
     partners_lost / partners_left counts."""
-    from ..cache import persist_stage
-
     docs = _t(spark, sf_dir, "documents")
-    sigs = D.minhash_signatures_md5(
-        docs, "text", "doc_id", num_hashes=12, shingle_n=3
-    )
-    banded = persist_stage(
-        D.band_keys_md5(sigs, "doc_id", bands=4, num_hashes=12)
-    )
+    banded = _md5_band_store(docs)
     cand = D.delta_candidate_pairs(banded, banded, "doc_id")
     # explode both directions in ONE pass over cand (a unionByName of
     # two selects would recompute the bucket join once per branch)
@@ -7435,15 +7351,8 @@ def dedup_canonical_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     between candidate pairs and actual deletion, released as
     (cluster, canonical_id, n_members, n_dropped) so the deletion
     volume is reviewable before any doc is dropped."""
-    from ..cache import persist_stage
-
     docs = _t(spark, sf_dir, "documents")
-    sigs = D.minhash_signatures_md5(
-        docs, "text", "doc_id", num_hashes=12, shingle_n=3
-    )
-    banded = persist_stage(
-        D.band_keys_md5(sigs, "doc_id", bands=4, num_hashes=12)
-    )
+    banded = _md5_band_store(docs)
     pairs = D.delta_candidate_pairs(banded, banded, "doc_id")
     clusters = D.duplicate_clusters(pairs.select("id_a", "id_b"))
     member = clusters.join(

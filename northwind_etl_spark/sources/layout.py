@@ -2,9 +2,6 @@
 truncate/delete-reload) grown up for partitioned, append-heavy,
 100 TB storage.
 
-- ``incremental_overwrite``: reload only the partitions present in the
-  incoming batch (dynamic partition overwrite) — the idempotent
-  re-run story the reference approximates with DELETE+reload.
 - ``compact``: rewrite a directory into N right-sized files — small
   files are the silent killer of big parquet tables (one task per
   file, metadata bloat).
@@ -12,25 +9,16 @@ truncate/delete-reload) grown up for partitioned, append-heavy,
   cluster keys before writing, so parquet row-group min/max stats
   become selective and scans skip aggressively (poor-man's Z-order
   for the single-key case).
+
+Reloading only the partitions present in an incoming batch is
+``sources/files.py::write_reload(partition_by=)``: dynamic partition
+overwrite as a per-writer option, so no session conf is flipped.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-
-
-def incremental_overwrite(
-    df: DataFrame, path: str, *, partition_by: list[str]
-) -> None:
-    """Overwrite exactly the partitions present in `df`, leave the rest."""
-    spark = df.sparkSession
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        df.write.mode("overwrite").partitionBy(*partition_by).parquet(path)
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
 
 
 def compact(spark: SparkSession, path: str, *, target_files: int) -> None:

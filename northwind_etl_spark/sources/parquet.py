@@ -88,7 +88,12 @@ def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 _SCHEMAS: dict[tuple, StructType] = {}
 
 
-def _file_version(spark: SparkSession, path: str) -> tuple | None:
+def data_file_stats(path: str) -> list[tuple[str, int, int]]:
+    """(name, size, mtime_ns) of the local parquet file `path`, or of
+    every data file of a directory layout: files and directories whose
+    name starts with a dot or an underscore are skipped, as Spark's
+    reader skips them (``_SUCCESS``, ``.crc``, ``_spark_metadata``).
+    Raises OSError when the path is missing or not local."""
     files = [path]
     if os.path.isdir(path):
         files = []
@@ -100,10 +105,15 @@ def _file_version(spark: SparkSession, path: str) -> tuple | None:
                 if not f.startswith((".", "_"))
             ]
     stats = []
+    for f in files:
+        st = os.stat(f)
+        stats.append((f, st.st_size, st.st_mtime_ns))
+    return stats
+
+
+def _file_version(spark: SparkSession, path: str) -> tuple | None:
     try:
-        for f in files:
-            st = os.stat(f)
-            stats.append((f, st.st_size, st.st_mtime_ns))
+        stats = data_file_stats(path)
     except OSError:  # not a local path, or racing a rewrite: always infer
         return None
     nanos = spark.conf.get("spark.sql.legacy.parquet.nanosAsLong", "false")

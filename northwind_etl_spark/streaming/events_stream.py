@@ -16,8 +16,11 @@ stream would accumulate state forever.
 
 from __future__ import annotations
 
+import atexit
 import hashlib
+import itertools
 import os
+import shutil
 import tempfile
 from collections.abc import Iterator
 from typing import Any
@@ -25,11 +28,22 @@ from typing import Any
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import DataStreamWriter
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from ..schemas import EVENTS_RAW
 from ..session import harden
-from ..sources.parquet import _NS_TO_NTZ, read_parquet
+from ..sources.parquet import _NS_TO_NTZ, data_file_stats, read_parquet
+
+_SHUFFLE_PARTITIONS = "spark.sql.shuffle.partitions"
+_SINK_SEQ = itertools.count(1)
+_SPILL_ROOT: list[str] = []
+
+
+def events_path(sf_dir: str) -> str:
+    """The events parquet of a scale-factor dir: a single file or a
+    directory-layout dataset."""
+    return os.path.join(sf_dir, "events.parquet")
 
 
 def _events_stream_dir(sf_dir: str) -> str:
@@ -44,7 +58,7 @@ def _events_stream_dir(sf_dir: str) -> str:
     the file source see a SUBDIRECTORY, which it silently skips (it
     only descends into key=value partition dirs): the r13 scale lane
     caught exactly that as a 0-row drain."""
-    target = os.path.join(sf_dir, "events.parquet")
+    target = events_path(sf_dir)
     if os.path.isdir(target):
         return target
     d = os.path.join(
@@ -76,7 +90,7 @@ def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     and lands every event in Jan 1970.
     """
     harden(spark)
-    probe = read_parquet(spark, os.path.join(sf_dir, "events.parquet"))
+    probe = read_parquet(spark, events_path(sf_dir))
     ts_is_raw_ns = dict(probe.dtypes)["ts"] in ("bigint", "long")
     schema = EVENTS_RAW if ts_is_raw_ns else probe.schema
     raw = (
@@ -233,11 +247,11 @@ def upsert_by_partition_stream(
     loading of a partitioned table from a stream, without a lakehouse
     format.  Replays of a batch rewrite the same partitions to the same
     content (exactly-once at partition granularity)."""
-    from ..sources.layout import incremental_overwrite
+    from ..sources.files import write_reload
 
     def upsert(batch_df: DataFrame, batch_id: int) -> None:
         dated = batch_df.withColumn("event_date", F.to_date("ts"))
-        incremental_overwrite(dated, out_path, partition_by=["event_date"])
+        write_reload(dated, out_path, partition_by=["event_date"])
 
     q = (
         events.writeStream.foreachBatch(upsert)
@@ -255,7 +269,7 @@ def incremental_state_stream(
     *,
     keys: list[str],
     value: str,
-    shuffle_partitions: int | None = None,
+    source: str,
 ) -> None:
     """foreachBatch incremental aggregate maintenance — the streaming
     form of operators/incremental.py's mergeable-state pattern: each
@@ -270,9 +284,10 @@ def incremental_state_stream(
     recomputes the same version from the same predecessor instead of
     double-counting — exactly-once at state-version granularity, the
     same contract as upsert_by_partition_stream's partition overwrite.
-    """
-    import os
 
+    `source` is the parquet path the stream reads; it sizes the drain's
+    shuffle partitions as in run_available_now.
+    """
     from ..operators import incremental as I
 
     def merge(batch_df: DataFrame, batch_id: int) -> None:
@@ -290,27 +305,13 @@ def incremental_state_stream(
             merged = part
         merged.write.mode("overwrite").parquet(f"{state_root}/v{batch_id}")
 
-    spark = events.sparkSession
-    old = (
-        spark.conf.get("spark.sql.shuffle.partitions")
-        if shuffle_partitions is not None
-        else None
+    _drain(
+        events.writeStream.foreachBatch(merge).option(
+            "checkpointLocation", ckpt_path
+        ),
+        events.sparkSession,
+        source,
     )
-    if shuffle_partitions is not None:
-        spark.conf.set(
-            "spark.sql.shuffle.partitions", str(shuffle_partitions)
-        )
-    try:
-        q = (
-            events.writeStream.foreachBatch(merge)
-            .option("checkpointLocation", ckpt_path)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        if old is not None:
-            spark.conf.set("spark.sql.shuffle.partitions", old)
 
 
 def read_incremental_state(
@@ -333,29 +334,15 @@ def read_incremental_state(
     return I.finalize(state, prefix=prefix)
 
 
-def source_parquet_bytes(path: str) -> int | None:
+def source_parquet_bytes(path: str) -> int:
     """Data bytes of a parquet source that may be a single file OR a
     standard directory-layout dataset (ADVICE r12: os.path.getsize on
     a directory returns the inode size, ~4 KB, silently degrading the
-    adaptive partition count to 1 in exactly the production layout —
-    and a missing path raised OSError mid-plan).  Directories sum
-    their data files recursively (dotfiles/_SUCCESS markers excluded);
-    a missing path returns None so the caller keeps the session's
-    default partition count instead of crashing."""
-    if os.path.isfile(path):
-        return os.path.getsize(path)
-    if os.path.isdir(path):
-        total = 0
-        for root, _dirs, files in os.walk(path):
-            for f in files:
-                if f.startswith((".", "_")):
-                    continue
-                try:
-                    total += os.path.getsize(os.path.join(root, f))
-                except OSError:  # racing compaction/cleanup: skip
-                    continue
-        return total
-    return None
+    adaptive partition count to 1 in exactly the production layout).
+    Counts the data files sources/parquet.py::data_file_stats lists;
+    raises OSError on a missing or non-local path, which no stream
+    could have read either."""
+    return sum(size for _name, size, _mtime in data_file_stats(path))
 
 
 STREAM_PART_BYTES = 32 << 20
@@ -386,63 +373,117 @@ def adaptive_stream_partitions(input_bytes: int) -> int:
     return max(1, -(-int(input_bytes) // STREAM_PART_BYTES))
 
 
-def run_available_now(
-    df: DataFrame,
-    query_name: str,
+def _state_partitions(
+    spark: SparkSession, source: str, python_stateful: bool
+) -> int:
+    """The drain's state-partition count: the byte rule on `source`,
+    floored at the session's parallelism for python-stateful operators
+    (applyInPandasWithState walks its groups serially inside each
+    partition's Python worker, so that drain is bound by per-key
+    compute, not by state-store overhead)."""
+    n = adaptive_stream_partitions(source_parquet_bytes(source))
+    if python_stateful:
+        n = max(n, spark.sparkContext.defaultParallelism)
+    return n
+
+
+def _drain(
+    writer: DataStreamWriter,
+    spark: SparkSession,
+    source: str,
     *,
-    output_mode: str = "update",
-    shuffle_partitions: int | None = None,
-) -> DataFrame:
-    """Drain the stream with availableNow into a memory sink; returns
-    the materialized result as a batch DataFrame (test/dev helper).
+    python_stateful: bool = False,
+) -> None:
+    """Run `writer` once with availableNow at the state-partition count
+    sized from `source`, and wait for it to finish.
 
-    Mode contract — the memory sink APPENDS each micro-batch's output
-    to its table, so the caller's mode choice decides multi-batch
-    correctness: windowed aggregations drain in ``complete`` (sink
-    replaces the table per batch — a window updated across batches
-    lands once, not partial+final); exactly-once emitters
-    (stream–stream inner joins, dedup, watermark-closed session
-    windows) use ``append``; ``update`` is only safe for operators
-    whose sink table is post-aggregated by the caller (e.g. monotone
-    running counts reduced with MAX) or single-batch sources.
-
-    ``shuffle_partitions`` (from ``adaptive_stream_partitions``) is
-    applied around ``start()`` only — a streaming query captures the
-    conf at start and pins it into the checkpoint; the session value
-    is restored before returning so batch plans are untouched.
+    The count is set on the session around the query only: a
+    streaming query captures ``spark.sql.shuffle.partitions`` at start
+    and pins it into its checkpoint, and the session value is restored
+    before returning (also when the query raises), so batch plans are
+    untouched.
 
     Concurrency note (ADVICE r12): ``spark.sql.shuffle.partitions`` is
     SESSION-GLOBAL, so a plan built concurrently in another thread of
-    the same session during the set→start()→restore window would
-    capture the temporary value.  The engine's drains are
-    single-threaded (bench/driver run queries sequentially); a caller
-    that overlaps streaming drains with other plan construction must
-    serialize them (or build the other plans in a cloned session via
-    ``spark.newSession()``, which has its own conf).
+    the same session during this window would capture the temporary
+    value.  The engine's drains are single-threaded (bench/driver run
+    queries sequentially); a caller that overlaps streaming drains
+    with other plan construction must serialize them (or build the
+    other plans in a cloned session via ``spark.newSession()``, which
+    has its own conf).
+    """
+    n_parts = _state_partitions(spark, source, python_stateful)
+    old = spark.conf.get(_SHUFFLE_PARTITIONS)
+    spark.conf.set(_SHUFFLE_PARTITIONS, str(n_parts))
+    try:
+        writer.trigger(availableNow=True).start().awaitTermination()
+    finally:
+        spark.conf.set(_SHUFFLE_PARTITIONS, old)
+
+
+def spill_dir(base_name: str) -> str:
+    """Per-drain parquet spill dir under one session-scoped root that
+    is removed at interpreter exit — bench warmup + reps and repeated
+    driver checks must not accumulate full-result copies in /tmp
+    across rounds.  (The dirs can't be removed eagerly: the returned
+    DataFrame reads them lazily for its whole lifetime.)"""
+    if not _SPILL_ROOT:
+        root = tempfile.mkdtemp(prefix="nes_drain_")
+        atexit.register(shutil.rmtree, root, ignore_errors=True)
+        _SPILL_ROOT.append(root)
+    return tempfile.mkdtemp(prefix=f"{base_name}_", dir=_SPILL_ROOT[0])
+
+
+def run_available_now(
+    df: DataFrame,
+    name: str,
+    *,
+    source: str,
+    output_mode: str,
+    python_stateful: bool = False,
+) -> DataFrame:
+    """availableNow-drain a streaming DataFrame read from the parquet
+    path `source` into a uniquely-named memory sink (repeat calls in
+    one session must not collide), spill the result to a temp parquet
+    dir, and FREE the sink (also when the query raises).  The state-partition count comes from the
+    size of `source` (adaptive_stream_partitions), floored at the
+    session's parallelism when `python_stateful` (_state_partitions).
+
+    Without the spill+drop, every drain leaves its full result pinned
+    in driver memory for the session lifetime (the memory sink holds
+    all rows behind the temp view) — bench reps and repeated driver
+    checks would stack whole-table copies.  The parquet hop keeps the
+    result distributed (no collect) and the returned DataFrame owns
+    its own storage.
+
+    Output-mode contract (the memory sink APPENDS each micro-batch's
+    emitted rows to its table): windowed aggregations must drain in
+    ``complete`` mode — the sink then replaces the table every batch,
+    so a window updated across several micro-batches lands exactly
+    once.  In ``update`` mode the same window would land twice
+    (partial state + final state) as soon as the source splits into
+    >1 batch (multi-file input, maxFilesPerTrigger); ``update`` is only
+    safe when the caller post-aggregates the sink (e.g. monotone
+    running counts reduced with MAX per key).  ``append`` is for
+    operators that emit each row exactly once (stream–stream inner
+    joins, dropDuplicatesWithinWatermark, watermark-closed session
+    windows) — correct across any batch split by construction.
     """
     spark = df.sparkSession
-    old = (
-        spark.conf.get("spark.sql.shuffle.partitions")
-        if shuffle_partitions is not None
-        else None
-    )
-    if shuffle_partitions is not None:
-        spark.conf.set(
-            "spark.sql.shuffle.partitions", str(shuffle_partitions)
-        )
+    sink = f"{name}_{next(_SINK_SEQ)}"
+    spill = spill_dir(name)
     try:
-        q = (
-            df.writeStream.format("memory")
-            .queryName(query_name)
-            .outputMode(output_mode)
-            .trigger(availableNow=True)
-            .start()
+        _drain(
+            df.writeStream.format("memory").queryName(sink).outputMode(output_mode),
+            spark,
+            source,
+            python_stateful=python_stateful,
         )
-        q.awaitTermination()
-    finally:
-        if old is not None:
-            spark.conf.set("spark.sql.shuffle.partitions", old)
-    return spark.table(query_name)
+        out = spark.table(sink)
+        out.write.mode("overwrite").parquet(spill)
+    finally:  # a failed drain must not pin its partial rows either
+        spark.catalog.dropTempView(sink)
+    return read_parquet(spark, spill, schema=out.schema)
 
 
 def two_level_window_stream(

@@ -112,8 +112,34 @@ def test_bpe_leaves_no_persistent_blocks(spark):
     before = _persistent_rdd_ids(sc)
     texts = ["low lower lowest newer newest " * 5] * 4
     df = spark.createDataFrame([(i, t) for i, t in enumerate(texts)], ["doc_id", "text"])
-    out = learn_bpe_merges(df, "text", n_merges=7, min_freq=2, checkpoint_every=2)
-    assert out.count() > 0
+    # 11 merges: the checkpoint after merge 10 supersedes the one
+    # after merge 5 (CHECKPOINT_EVERY = 5)
+    out = learn_bpe_merges(df, "text", n_merges=11, min_freq=2)
+    assert out.count() == 11
+    assert _persistent_rdd_ids(sc) - before == set()
+
+
+def test_bpe_failed_round_leaves_no_persistent_blocks(spark, monkeypatch):
+    """A round that raises must still release the word-type persist
+    and the live checkpoint's blocks."""
+    from northwind_etl_spark.operators import bpe
+
+    sc = spark.sparkContext
+    before = _persistent_rdd_ids(sc)
+    texts = ["low lower lowest newer newest " * 5] * 4
+    df = spark.createDataFrame([(i, t) for i, t in enumerate(texts)], ["doc_id", "text"])
+    apply_merge = bpe._apply_merge
+    calls = []
+
+    def failing_merge(current, left, right):
+        calls.append((left, right))
+        if len(calls) > bpe.CHECKPOINT_EVERY + 1:  # after one checkpoint
+            raise RuntimeError("round failed")
+        return apply_merge(current, left, right)
+
+    monkeypatch.setattr(bpe, "_apply_merge", failing_merge)
+    with pytest.raises(RuntimeError, match="round failed"):
+        learn_bpe_merges(df, "text", n_merges=11, min_freq=2)
     assert _persistent_rdd_ids(sc) - before == set()
 
 

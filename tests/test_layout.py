@@ -1,5 +1,5 @@
 """Storage-layout utilities: compaction, clustered writes, incremental
-partition overwrite."""
+partition overwrite (sources/files.py::write_reload(partition_by=))."""
 
 from __future__ import annotations
 
@@ -9,11 +9,8 @@ import tempfile
 import pyarrow.parquet as pq
 from pyspark.sql import functions as F
 
-from northwind_etl_spark.sources.layout import (
-    compact,
-    incremental_overwrite,
-    write_clustered,
-)
+from northwind_etl_spark.sources.files import write_reload
+from northwind_etl_spark.sources.layout import compact, write_clustered
 
 
 def test_compact_reduces_file_count(spark, sf_dir):
@@ -54,7 +51,11 @@ def test_incremental_overwrite_touches_only_new_partitions(spark, sf_dir):
     batch = li.where(F.col("ship_month") == "1996-06").withColumn(
         "l_quantity", F.lit(0.0)
     )
-    incremental_overwrite(batch, out, partition_by=["ship_month"])
+    mode = "spark.sql.sources.partitionOverwriteMode"
+    session_mode = spark.conf.get(mode)
+    write_reload(batch, out, partition_by=["ship_month"])
+    # dynamic overwrite is the writer's option, not a session-wide flip
+    assert spark.conf.get(mode) == session_mode
     after = spark.read.parquet(out)
     assert after.count() == before
     assert (

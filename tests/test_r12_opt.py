@@ -1,8 +1,8 @@
 """Focused tests for the r12 OPTIMIZATION-round operator changes:
-the multi-quantile selection loop (group_quantiles / quantiles), the
-early distinct-walk exit in every selection variant, and the
-scale-adaptive streaming partition rule.  Every change must be
-result-identical — these tests pin that, including with the early
+the multi-quantile selection loop (group_quantiles / quantiles) and
+the early distinct-walk exit in every selection variant (the
+scale-adaptive streaming partition rule is tested in
+tests/test_streaming.py).  Every change must be result-identical — these tests pin that, including with the early
 walk forced on and forced off."""
 
 from __future__ import annotations
@@ -14,9 +14,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from northwind_etl_spark.operators import selection as SEL
-from northwind_etl_spark.streaming.events_stream import (
-    adaptive_stream_partitions,
-)
 
 
 def _df(spark, vals, group=None):
@@ -109,13 +106,3 @@ def test_group_quantiles_validates(spark):
         SEL.group_quantiles(df, "x", "g", [])
     with pytest.raises(ValueError):
         SEL.group_quantiles(df, "x", "g", [0.5, 0.5])
-
-
-def test_adaptive_stream_partitions_scales():
-    assert adaptive_stream_partitions(0) == 1
-    assert adaptive_stream_partitions(1) == 1
-    assert adaptive_stream_partitions(32 << 20) == 1
-    assert adaptive_stream_partitions((32 << 20) + 1) == 2
-    # linear at scale: 1 TiB of source -> 32768 partitions at the
-    # 32 MiB target
-    assert adaptive_stream_partitions(1 << 40) == 32768

@@ -4,9 +4,6 @@ must be result-identical — these tests pin that:
 - the one-parse literal builders (functions/arrays.py) equal the old
   element-wise F.lit spelling value-for-value (the equality the r12
   header comment promised — ADVICE r12);
-- source_parquet_bytes handles single-file AND directory-layout
-  parquet sources (ADVICE r12: getsize on a directory returned the
-  inode size and degraded the adaptive partition count to 1);
 - the selection walk's struct-isin predicate (ADVICE r12) keeps the
   exact per-group answers, and NULL group keys are rejected up front
   with an actionable error instead of a deep AssertionError.
@@ -27,7 +24,6 @@ from northwind_etl_spark.functions.arrays import (
     lit_long_array,
 )
 from northwind_etl_spark.operators import selection as SEL
-from northwind_etl_spark.streaming.events_stream import source_parquet_bytes
 
 
 def _one(spark, col):
@@ -83,48 +79,6 @@ def test_lit_double_matrix_equals_elementwise_lits(spark):
     assert fast == slow
     for frow, row in zip(fast, rows):
         assert list(frow) == [float(v) for v in row]
-
-
-def test_source_parquet_bytes_file_dir_missing(tmp_path):
-    f = tmp_path / "single.parquet"
-    f.write_bytes(b"x" * 1234)
-    assert source_parquet_bytes(str(f)) == 1234
-
-    d = tmp_path / "dataset.parquet"
-    sub = d / "k=1"
-    sub.mkdir(parents=True)
-    (d / "part-0.parquet").write_bytes(b"a" * 100)
-    (sub / "part-1.parquet").write_bytes(b"b" * 50)
-    (d / "_SUCCESS").write_bytes(b"")
-    (d / ".hidden.crc").write_bytes(b"c" * 999)
-    # data files only: 100 + 50; markers and dotfiles excluded
-    assert source_parquet_bytes(str(d)) == 150
-
-    assert source_parquet_bytes(str(tmp_path / "absent.parquet")) is None
-
-
-def test_stream_reads_directory_layout_source(spark, sf_dir, tmp_path):
-    """A DIRECTORY-layout events.parquet must stream the same rows as
-    the single-file fixture (the first r13 scale-lane run drained 0
-    rows: the symlink watch-dir made the file source see a
-    subdirectory, which it silently skips)."""
-    import shutil
-
-    from northwind_etl_spark.plans.queries import stream_tumbling_event_counts
-
-    copy_dir = tmp_path / "sfdir"
-    evdir = copy_dir / "events.parquet"
-    evdir.mkdir(parents=True)
-    shutil.copy(f"{sf_dir}/events.parquet", evdir / "part-00000.parquet")
-    (evdir / "_SUCCESS").write_bytes(b"")
-
-    got = sorted(
-        tuple(r) for r in stream_tumbling_event_counts(spark, str(copy_dir)).collect()
-    )
-    want = sorted(
-        tuple(r) for r in stream_tumbling_event_counts(spark, sf_dir).collect()
-    )
-    assert got == want and len(got) > 0
 
 
 def test_group_selection_rejects_null_group_keys(spark):

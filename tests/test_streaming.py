@@ -1,9 +1,12 @@
 """Structured Streaming twins: drained with availableNow into memory
-sinks, checked against the batch operators' results (same semantics)."""
+sinks through the registry's drain (run_available_now: state partitions
+sized from the source), checked against the batch operators' results
+(same semantics)."""
 
 from __future__ import annotations
 
 import pytest
+from pyspark.errors import StreamingQueryException
 from pyspark.sql import functions as F
 
 from northwind_etl_spark.operators.sessionize import tumbling_counts
@@ -14,7 +17,8 @@ from northwind_etl_spark.streaming import events_stream as ES
 def test_windowed_counts_stream_matches_batch(spark, sf_dir):
     stream = ES.read_events_stream(spark, sf_dir)
     result = ES.run_available_now(
-        ES.windowed_counts_stream(stream), "wc_stream", output_mode="complete"
+        ES.windowed_counts_stream(stream), "wc_stream",
+        source=ES.events_path(sf_dir), output_mode="complete",
     ).collect()
     batch = {
         (r.window_start, r.event_type): r.n_events
@@ -27,7 +31,8 @@ def test_windowed_counts_stream_matches_batch(spark, sf_dir):
 def test_session_window_stream_runs(spark, sf_dir):
     stream = ES.read_events_stream(spark, sf_dir)
     rows = ES.run_available_now(
-        ES.session_window_stream(stream), "sw_stream", output_mode="append"
+        ES.session_window_stream(stream), "sw_stream",
+        source=ES.events_path(sf_dir), output_mode="append",
     ).collect()
     assert len(rows) > 0
     for r in rows:
@@ -44,6 +49,7 @@ def test_stream_static_enrichment(spark, sf_dir):
     enriched = ES.run_available_now(
         ES.enrich_with_static(stream, dim, on="event_type"),
         "enrich_stream",
+        source=ES.events_path(sf_dir),
         output_mode="append",
     )
     n_events = read_events(spark, sf_dir).count()
@@ -56,7 +62,8 @@ def test_stream_dedup_drops_duplicates(spark, sf_dir):
     # duplicate every event by unioning the stream with itself
     doubled = stream.union(stream)
     deduped = ES.run_available_now(
-        ES.stream_dedup(doubled), "dedup_stream", output_mode="append"
+        ES.stream_dedup(doubled), "dedup_stream",
+        source=ES.events_path(sf_dir), output_mode="append",
     )
     n_unique = read_events(spark, sf_dir).count()
     assert deduped.count() == n_unique
@@ -106,9 +113,13 @@ def test_checkpointed_file_sink_is_exactly_once(spark, sf_dir):
 
 def test_stateful_running_counts(spark, sf_dir):
     stream = ES.read_events_stream(spark, sf_dir)
+    # update mode: a user active in several micro-batches lands once
+    # per batch with a growing total, so MAX per key is the final state
     rows = ES.run_available_now(
-        ES.running_user_counts_stream(stream), "ruc_stream"
-    ).collect()
+        ES.running_user_counts_stream(stream), "ruc_stream",
+        source=ES.events_path(sf_dir), output_mode="update",
+        python_stateful=True,
+    ).groupBy("user_id").agg(F.max("events_seen").alias("events_seen")).collect()
     got = {r.user_id: r.events_seen for r in rows}
     batch = {
         r.user_id: r.n
@@ -130,6 +141,7 @@ def test_stream_stream_interval_join_matches_batch(spark, sf_dir):
         for r in ES.run_available_now(
             ES.purchase_click_attribution_stream(stream),
             "ss_join_stream",
+            source=ES.events_path(sf_dir),
             output_mode="append",
         ).collect()
     }
@@ -306,7 +318,8 @@ def test_two_level_window_stream_multi_batch_equals_batch(spark, sf_dir):
         .parquet(src)
     )
     got = run_available_now(
-        two_level_window_stream(stream), "two_level_mb", output_mode="append"
+        two_level_window_stream(stream), "two_level_mb",
+        source=src, output_mode="append",
     )
 
     wm = ev.agg(
@@ -334,26 +347,95 @@ def test_two_level_window_stream_multi_batch_equals_batch(spark, sf_dir):
     assert want.exceptAll(got).count() == 0
 
 
-def test_python_stateful_drain_floor_without_source_size(
-    spark, tmp_path, monkeypatch
-):
-    """A source whose size cannot be read still gets the python-stateful
-    partition floor (the session's parallelism), not the session-default
-    shuffle partition count; other drains keep the session default."""
-    from northwind_etl_spark.plans import queries as Q
+def test_adaptive_stream_partitions_scales():
+    assert ES.adaptive_stream_partitions(0) == 1
+    assert ES.adaptive_stream_partitions(1) == 1
+    assert ES.adaptive_stream_partitions(32 << 20) == 1
+    assert ES.adaptive_stream_partitions((32 << 20) + 1) == 2
+    # linear at scale: 1 TiB of source -> 32768 partitions at the
+    # 32 MiB target
+    assert ES.adaptive_stream_partitions(1 << 40) == 32768
 
-    seen = []
 
-    def drain(df, name, *, output_mode, shuffle_partitions):
-        seen.append(shuffle_partitions)
-        return spark.range(3)
+def test_source_parquet_bytes_file_dir_missing(tmp_path):
+    f = tmp_path / "single.parquet"
+    f.write_bytes(b"x" * 1234)
+    assert ES.source_parquet_bytes(str(f)) == 1234
 
-    monkeypatch.setattr(ES, "run_available_now", drain)
-    missing = str(tmp_path / "no_such_sf")
-    assert ES.source_parquet_bytes(f"{missing}/events.parquet") is None
-    out = Q._drain_stream(
-        spark.range(1), "floor", sf_dir=missing, python_stateful=True
+    d = tmp_path / "dataset.parquet"
+    sub = d / "k=1"
+    sub.mkdir(parents=True)
+    (d / "part-0.parquet").write_bytes(b"a" * 100)
+    (sub / "part-1.parquet").write_bytes(b"b" * 50)
+    (d / "_SUCCESS").write_bytes(b"")
+    (d / ".hidden.crc").write_bytes(b"c" * 999)
+    (d / "_spark_metadata").mkdir()
+    (d / "_spark_metadata" / "0").write_bytes(b"m" * 77)
+    # data files only: 100 + 50; markers, dotfiles and metadata dirs
+    # excluded, as Spark's reader excludes them
+    assert ES.source_parquet_bytes(str(d)) == 150
+
+    # a source that cannot be sized could not have streamed either
+    with pytest.raises(OSError):
+        ES.source_parquet_bytes(str(tmp_path / "absent.parquet"))
+
+
+def test_stream_reads_directory_layout_source(spark, sf_dir, tmp_path):
+    """A DIRECTORY-layout events.parquet must stream the same rows as
+    the single-file fixture (the first r13 scale-lane run drained 0
+    rows: the symlink watch-dir made the file source see a
+    subdirectory, which it silently skips)."""
+    import shutil
+
+    from northwind_etl_spark.plans.queries import stream_tumbling_event_counts
+
+    copy_dir = tmp_path / "sfdir"
+    evdir = copy_dir / "events.parquet"
+    evdir.mkdir(parents=True)
+    shutil.copy(f"{sf_dir}/events.parquet", evdir / "part-00000.parquet")
+    (evdir / "_SUCCESS").write_bytes(b"")
+
+    got = sorted(
+        tuple(r) for r in stream_tumbling_event_counts(spark, str(copy_dir)).collect()
     )
-    assert out.count() == 3
-    Q._drain_stream(spark.range(1), "floor", sf_dir=missing)
-    assert seen == [spark.sparkContext.defaultParallelism, None]
+    want = sorted(
+        tuple(r) for r in stream_tumbling_event_counts(spark, sf_dir).collect()
+    )
+    assert got == want and len(got) > 0
+
+
+def test_drain_state_partitions(spark, tmp_path):
+    """The drain's state-partition count: one partition per started
+    STREAM_PART_BYTES of source data, floored at the session's
+    parallelism for python-stateful operators."""
+    small = tmp_path / "small.parquet"
+    small.write_bytes(b"x")
+    big = tmp_path / "big.parquet"
+    with open(big, "wb") as fh:  # sparse: the size without the bytes
+        fh.truncate(3 * ES.STREAM_PART_BYTES + 1)
+    cores = spark.sparkContext.defaultParallelism
+
+    assert ES._state_partitions(spark, str(small), False) == 1
+    assert ES._state_partitions(spark, str(big), False) == 4
+    assert ES._state_partitions(spark, str(small), True) == max(1, cores)
+    assert ES._state_partitions(spark, str(big), True) == max(4, cores)
+
+
+def test_failed_drain_restores_shuffle_partitions_and_drops_sink(spark, sf_dir):
+    """The drain's partition count is set on the session only around
+    its query: a query that raises leaves the session value as it was,
+    and its memory sink is dropped like a finished one's."""
+    key = "spark.sql.shuffle.partitions"
+    stream = ES.read_events_stream(spark, sf_dir)
+    before = spark.conf.get(key)
+    assert before != "1"  # the drain below runs at 1
+    failing = stream.withColumn("boom", F.raise_error(F.lit("boom")))
+    with pytest.raises(StreamingQueryException):
+        ES.run_available_now(
+            failing, "failing_drain",
+            source=ES.events_path(sf_dir), output_mode="append",
+        )
+    assert spark.conf.get(key) == before
+    assert not any(
+        t.name.startswith("failing_drain_") for t in spark.catalog.listTables()
+    )
