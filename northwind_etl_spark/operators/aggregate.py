@@ -13,8 +13,6 @@ derive.decimal_sum for order-independent results (see derive.py).
 
 from __future__ import annotations
 
-from collections.abc import Sequence
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -23,7 +21,3 @@ def table_count(df: DataFrame, alias: str = "n_rows") -> DataFrame:
     """A2/S3 — COUNT(*) as a 1-row DataFrame (not an action), so it
     composes and the oracle can check it."""
     return df.agg(F.count(F.lit(1)).alias(alias))
-
-
-def distinct_values(df: DataFrame, cols: Sequence[str]) -> DataFrame:
-    return df.select(*cols).distinct()

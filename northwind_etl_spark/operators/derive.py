@@ -16,13 +16,8 @@ nondeterminism a 1000-executor aggregation would otherwise have.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
-
-
-def with_derived(df: DataFrame, name: str, expr: Column | str) -> DataFrame:
-    col = F.expr(expr) if isinstance(expr, str) else expr
-    return df.withColumn(name, col)
 
 
 def revenue_expr() -> Column:

@@ -3,23 +3,19 @@
 The reference delegates keys to SQL Server ``IDENTITY(1,1)``
 (``Project Plan2.md:37``, ``Project Plan5.md:225,239``): dense,
 sequential, assigned in insert order.  Spark has no identity columns;
-we provide two strategies with explicit scale contracts:
-
-- ``dense_keys``: dense 1..N in natural-key order, computed by the
-  two-phase distributed ranking (operators/ranking.py::
-  global_row_number — range exchange, a per-partition local sort and
-  record counter, and per-partition offsets attached as one literal
-  array).  Bit-identical to ``row_number() OVER (ORDER BY
-  natural_key)`` when the order is total (which a natural KEY is by
-  definition), but with NO ``Exchange SinglePartition``: the original
-  single-window form was this repo's one documented scale-limited
-  operator, and the r09 registry-wide plan lint flagged it — at 100 TB
-  even "dimension" tables (part, customer) are billions of rows, and a
-  one-task global sort is a silent single-core funnel.
-- ``sparse_keys``: ``monotonically_increasing_id`` — fully parallel,
-  unique, NOT dense; for fact-scale keys where density is cosmetic.
-  (The reference's own fact key, OrderFactKey BIGINT IDENTITY, is never
-  read by any query — sparseness costs nothing.)
+``dense_keys`` gives dimensions dense 1..N keys in natural-key order,
+computed by the two-phase distributed ranking (operators/ranking.py::
+global_row_number — range exchange, a per-partition local sort and
+record counter, and per-partition offsets attached as one literal
+array).  Bit-identical to ``row_number() OVER (ORDER BY natural_key)``
+when the order is total (which a natural KEY is by definition), but
+with NO ``Exchange SinglePartition``: the original single-window form
+was this repo's one documented scale-limited operator, and the r09
+registry-wide plan lint flagged it — at 100 TB even "dimension" tables
+(part, customer) are billions of rows, and a one-task global sort is a
+silent single-core funnel.  Facts get no surrogate key: the
+reference's own fact key, OrderFactKey BIGINT IDENTITY, is never read
+by any query.
 """
 
 from __future__ import annotations
@@ -36,8 +32,3 @@ def dense_keys(df: DataFrame, key_name: str, order_by: str | list[str]) -> DataF
     order_cols = [order_by] if isinstance(order_by, str) else list(order_by)
     ranked = global_row_number(df, order_cols, rank_col=key_name)
     return ranked.withColumn(key_name, F.col(key_name).cast("int"))
-
-
-def sparse_keys(df: DataFrame, key_name: str) -> DataFrame:
-    """Unique sparse 64-bit keys, no shuffle, fact-scale safe."""
-    return df.withColumn(key_name, F.monotonically_increasing_id())

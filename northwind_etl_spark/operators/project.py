@@ -1,11 +1,12 @@
-"""Projection family: rename (P1), select/reorder (P2), drop (P4).
+"""Projection family: rename (P1), select/reorder (P2).
 
 Reference: ``df.rename(columns={...})`` (``etl_category.py:26-28``),
-``df = df[[...]]`` (``etl_category.py:31``), ``df.drop(col, axis=1)``
-(``etl_orders.py:42,69``).  In Spark these are pure logical-plan nodes:
-Catalyst's ColumnPruning collapses them into the scan, so a projection
-over parquet reads only the projected columns (check ReadSchema in
-`.explain("formatted")`).
+``df = df[[...]]`` (``etl_category.py:31``).  The reference's drop
+(P4, ``df.drop(col, axis=1)``, ``etl_orders.py:42,69``) is Spark's own
+``DataFrame.drop``, called inline (``extended_price_3factor``).  In
+Spark these are pure logical-plan nodes: Catalyst's ColumnPruning
+collapses them into the scan, so a projection over parquet reads only
+the projected columns (check ReadSchema in `.explain("formatted")`).
 """
 
 from __future__ import annotations
@@ -26,8 +27,3 @@ def rename_columns(df: DataFrame, mapping: Mapping[str, str]) -> DataFrame:
 def select_columns(df: DataFrame, cols: Sequence[str]) -> DataFrame:
     """P2 — keep exactly the target columns, in order (etl_category.py:31)."""
     return df.select(*cols)
-
-
-def drop_columns(df: DataFrame, *cols: str) -> DataFrame:
-    """P4 — remove temp/redundant columns (etl_orders.py:42,69)."""
-    return df.drop(*cols)

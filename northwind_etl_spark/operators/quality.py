@@ -1,5 +1,4 @@
-"""Data-quality guards: V1 arity check, V2 empty-input guard, and the
-zero-null-key audit the reference runs manually.
+"""Data-quality guards: V1 arity check and V2 empty-input guard.
 
 Reference V1: ``if len(data_to_insert[0]) != 9: raise``
 (``etl_orders.py:123-124``) → structural column assertion here.
@@ -12,7 +11,6 @@ from __future__ import annotations
 from collections.abc import Sequence
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 
 def assert_columns(df: DataFrame, expected: Sequence[str]) -> DataFrame:
@@ -25,9 +23,3 @@ def assert_columns(df: DataFrame, expected: Sequence[str]) -> DataFrame:
 def is_empty(df: DataFrame) -> bool:
     """V2 — empty-input guard; isEmpty scans at most one row."""
     return df.isEmpty()
-
-
-def null_key_count(df: DataFrame, key: str) -> DataFrame:
-    """Zero-null surrogate-key invariant (Project Plan6.md:158-159),
-    as a 1-row DataFrame for oracle checking."""
-    return df.agg(F.sum(F.col(key).isNull().cast("long")).alias("n_null_keys"))

@@ -2897,7 +2897,7 @@ def exact_p90_price_by_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     (operators/selection.py::group_kth_smallest): the exact p90 of
     o_totalprice per order priority — all groups advance together,
     one (group, bin) histogram aggregation per pass with each group's
-    own range broadcast-joined in.  The oracle is the per-group
+    own range read from a literal map.  The oracle is the per-group
     row_number definition."""
     from ..operators.selection import group_kth_smallest
 

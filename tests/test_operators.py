@@ -8,23 +8,19 @@ import pytest
 from pyspark.sql import functions as F
 
 from northwind_etl_spark.functions.texttools import rolling_hash_expr, shingles_expr
-from northwind_etl_spark.operators.aggregate import distinct_values, table_count
+from northwind_etl_spark.operators.aggregate import table_count
 from northwind_etl_spark.operators.casts import coerce_columns
 from northwind_etl_spark.operators.dedup import dedup_exact, dedup_hash
-from northwind_etl_spark.operators.derive import revenue_expr, with_derived
+from northwind_etl_spark.operators.derive import revenue_expr
 from northwind_etl_spark.operators.joins import (
     anti_join_audit,
     broadcast_lookup,
     inner_join,
     semi_join,
 )
-from northwind_etl_spark.operators.keys import dense_keys, sparse_keys
-from northwind_etl_spark.operators.project import (
-    drop_columns,
-    rename_columns,
-    select_columns,
-)
-from northwind_etl_spark.operators.quality import assert_columns, is_empty, null_key_count
+from northwind_etl_spark.operators.keys import dense_keys
+from northwind_etl_spark.operators.project import rename_columns, select_columns
+from northwind_etl_spark.operators.quality import assert_columns, is_empty
 from northwind_etl_spark.operators.sort import top_k
 
 
@@ -33,7 +29,6 @@ def test_rename_select_drop(spark):
     out = rename_columns(df, {"x": "id", "y": "name"})
     assert out.columns == ["id", "name", "z"]
     assert select_columns(out, ["z", "id"]).columns == ["z", "id"]
-    assert drop_columns(out, "z").columns == ["id", "name"]
     with pytest.raises(ValueError, match="absent"):
         rename_columns(df, {"nope": "q"})
 
@@ -48,7 +43,7 @@ def test_derive_revenue_formula(spark):
     df = spark.createDataFrame(
         [(100.0, 0.1)], "l_extendedprice DOUBLE, l_discount DOUBLE"
     )
-    assert with_derived(df, "rev", revenue_expr()).first().rev == pytest.approx(90.0)
+    assert df.select(revenue_expr().alias("rev")).first().rev == pytest.approx(90.0)
 
 
 def test_joins_family(spark):
@@ -69,8 +64,6 @@ def test_surrogate_keys(spark):
     df = spark.createDataFrame([(30,), (10,), (20,)], "nk INT")
     dense = dense_keys(df, "sk", "nk").orderBy("sk").collect()
     assert [(r.sk, r.nk) for r in dense] == [(1, 10), (2, 20), (3, 30)]
-    sparse = sparse_keys(df, "sk")
-    assert sparse.select("sk").distinct().count() == 3
 
 
 def test_quality_guards(spark):
@@ -80,13 +73,11 @@ def test_quality_guards(spark):
         assert_columns(df, ["k", "a"])
     assert not is_empty(df)
     assert is_empty(df.where(F.lit(False)))
-    assert null_key_count(df, "k").first().n_null_keys == 1
 
 
 def test_aggregate_and_topk(spark):
     df = spark.createDataFrame([(1,), (2,), (2,)], "v INT")
     assert table_count(df).first().n_rows == 3
-    assert distinct_values(df, ["v"]).count() == 2
     top = top_k(df, [F.desc("v")], 2).collect()
     assert [r.v for r in top] == [2, 2]
 

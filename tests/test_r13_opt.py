@@ -4,9 +4,9 @@ must be result-identical — these tests pin that:
 - the one-parse literal builders (functions/arrays.py) equal the old
   element-wise F.lit spelling value-for-value (the equality the r12
   header comment promised — ADVICE r12);
-- the selection walk's struct-isin predicate (ADVICE r12) keeps the
-  exact per-group answers, and NULL group keys are rejected up front
-  with an actionable error instead of a deep AssertionError.
+- the SimHash expression rewrites and BPE's one-fold encode equal
+  their older spellings.  (Its selection tests live in
+  tests/test_selection.py.)
 """
 
 from __future__ import annotations
@@ -14,7 +14,6 @@ from __future__ import annotations
 import random
 from decimal import Decimal
 
-import pytest
 from pyspark.sql import functions as F
 
 from northwind_etl_spark.functions.arrays import (
@@ -23,7 +22,6 @@ from northwind_etl_spark.functions.arrays import (
     lit_double_matrix,
     lit_long_array,
 )
-from northwind_etl_spark.operators import selection as SEL
 
 
 def _one(spark, col):
@@ -81,36 +79,8 @@ def test_lit_double_matrix_equals_elementwise_lits(spark):
         assert list(frow) == [float(v) for v in row]
 
 
-def test_group_selection_rejects_null_group_keys(spark):
-    df = spark.createDataFrame(
-        [("a", 1.0), (None, 2.0), ("a", 3.0)], ["g", "x"]
-    )
-    with pytest.raises(ValueError, match="NULL group key"):
-        SEL.group_kth_smallest(df, "x", "g")
 
 
-def test_group_selection_walk_isin_many_groups(spark):
-    """Many (group, quantile) keys exercise the flat struct-isin walk
-    predicate; answers must equal the per-group numpy sort."""
-    rng = random.Random(23)
-    rows = [
-        (f"g{rng.randrange(40)}", rng.uniform(-1e3, 1e3))
-        for _ in range(6000)
-    ]
-    df = spark.createDataFrame(rows, ["g", "x"])
-    res = SEL.group_quantiles(df, "x", "g", [0.1, 0.5, 0.9])
-    import math
-
-    by_g: dict[str, list[float]] = {}
-    for g, x in rows:
-        by_g.setdefault(g, []).append(x)
-    for g in by_g:
-        by_g[g].sort()
-    assert len(res) == 3 * len(by_g)
-    for g, qq, v, k, n in res:
-        assert n == len(by_g[g])
-        assert k == max(1, math.ceil(qq * n))
-        assert v == by_g[g][k - 1]
 
 
 def test_simhash_expr_rewrite_identical(spark):
@@ -219,13 +189,3 @@ def test_bpe_one_fold_encode_equals_chained(spark):
     ).first()["syms"]
     assert got == ["aa", "a"]
 
-
-def test_group_selection_int_group_keys_walk(spark):
-    """Integer group keys go through the same struct-isin walk (the
-    literal structs are cast to the frame's exact key type)."""
-    rows = [(i % 5, float((i * 13) % 101)) for i in range(500)]
-    df = spark.createDataFrame(rows, ["g", "x"])
-    res = SEL.group_kth_smallest(df, "x", "g", q=0.5)
-    for g, v, k, n in res:
-        mine = sorted(x for gg, x in rows if gg == g)
-        assert v == mine[k - 1]

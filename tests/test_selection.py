@@ -1,17 +1,29 @@
 """Sortless exact-selection proofs (operators/selection.py): vs
 numpy.partition on random data, tie-heavy data, boundary ks, negative
-ranges, and the quantile convention."""
+ranges, and the quantile convention; the multi-quantile loop
+(group_quantiles / quantiles), the early distinct-walk exit forced on
+and off, the struct-isin walk over many and integer group keys, NULL
+group-key rejection, and the one-group face running the same jobs as
+the ungrouped one."""
 
 from __future__ import annotations
+
+import math
+import random
 
 import numpy as np
 import pytest
 
+from northwind_etl_spark.operators import selection as SEL
 from northwind_etl_spark.operators.selection import exact_quantile, kth_smallest
 
 
-def _df(spark, values):
-    return spark.createDataFrame([(float(v),) for v in values], ["x"])
+def _df(spark, values, group=None):
+    if group is None:
+        return spark.createDataFrame([(float(v),) for v in values], ["x"])
+    return spark.createDataFrame(
+        [(g, float(v)) for g, v in zip(group, values)], ["g", "x"]
+    )
 
 
 def test_matches_numpy_on_random(spark):
@@ -171,3 +183,159 @@ def test_group_median_mad_planted_outlier(spark):
     # -> lower median (6th smallest) = 3
     assert mad == 3.0
     assert abs(1e9 - med) > 3 * mad  # the outlier is flagged
+
+
+def test_group_quantiles_matches_repeated_single_calls(spark):
+    rng = random.Random(7)
+    vals = [rng.uniform(-1e4, 1e4) for _ in range(3000)]
+    groups = [rng.choice(["a", "b", "c"]) for _ in vals]
+    df = _df(spark, vals, groups)
+    qs = [0.05, 0.5, 0.95]
+    multi = SEL.group_quantiles(df, "x", "g", qs)
+    for qq in qs:
+        single = SEL.group_kth_smallest(df, "x", "g", q=qq)
+        got = sorted((g, v, k, n) for g, q2, v, k, n in multi if q2 == qq)
+        assert got == sorted(single)
+
+
+def test_group_quantiles_matches_numpy(spark):
+    rng = random.Random(13)
+    vals = [rng.gauss(0, 100) for _ in range(5000)]
+    groups = [rng.choice(["g1", "g2"]) for _ in vals]
+    df = _df(spark, vals, groups)
+    res = SEL.group_quantiles(df, "x", "g", [0.25, 0.75])
+
+    for g, qq, v, k, n in res:
+        mine = sorted(x for x, gg in zip(vals, groups) if gg == g)
+        assert n == len(mine)
+        assert k == max(1, math.ceil(qq * n))
+        assert v == mine[k - 1]
+
+
+def test_quantiles_single_group_matches_kth(spark):
+    rng = random.Random(3)
+    vals = [rng.uniform(0, 1e6) for _ in range(4000)]
+    df = _df(spark, vals)
+    qres = SEL.quantiles(df, "x", [0.5, 0.9])
+    for qq in (0.5, 0.9):
+        v, k, n = SEL.kth_smallest(df, "x", q=qq)
+        assert qres[qq] == (v, k, n)
+
+
+@pytest.mark.parametrize("walk_max", [0, 10**9])
+def test_early_walk_on_off_identical(spark, monkeypatch, walk_max):
+    """Forcing the walk always-on (huge threshold) and always-off
+    (zero) must give the same exact answers — the walk is an exact
+    finisher, never an approximation."""
+    rng = random.Random(42)
+    vals = [rng.uniform(-5e5, 5e5) for _ in range(2500)]
+    groups = [rng.choice(["p1", "p2", "p3"]) for _ in vals]
+    df = _df(spark, vals, groups)
+    monkeypatch.setattr(SEL, "_WALK_MAX", walk_max)
+    got_g = SEL.group_kth_smallest(df, "x", "g", q=0.5)
+    got_s = SEL.kth_smallest(_df(spark, vals), "x", q=0.5)
+    for g, v, k, n in got_g:
+        mine = sorted(x for x, gg in zip(vals, groups) if gg == g)
+        assert v == mine[k - 1]
+    allv = sorted(vals)
+    assert got_s[0] == allv[got_s[1] - 1]
+
+
+def test_weighted_early_walk_identical(spark, monkeypatch):
+    rows = [(float(v), (v * 7) % 5 + 1) for v in range(997)]
+    df = spark.createDataFrame(rows, ["x", "w"])
+    baseline = None
+    for walk_max in (0, 10**9):
+        monkeypatch.setattr(SEL, "_WALK_MAX", walk_max)
+        got = SEL.weighted_kth_smallest(df, "x", "w")
+        if baseline is None:
+            baseline = got
+        assert got == baseline
+    # exact check vs expanded multiset
+    expanded = sorted(
+        x for x, w in rows for _ in range(int(w))
+    )
+    v, k, tw = baseline
+    assert tw == sum(int(w) for _, w in rows)
+    assert v == expanded[k - 1]
+
+
+def test_group_quantiles_validates(spark):
+    df = _df(spark, [1.0, 2.0], ["a", "a"])
+    with pytest.raises(ValueError):
+        SEL.group_quantiles(df, "x", "g", [])
+    with pytest.raises(ValueError):
+        SEL.group_quantiles(df, "x", "g", [0.5, 0.5])
+
+
+def test_group_selection_rejects_null_group_keys(spark):
+    df = spark.createDataFrame(
+        [("a", 1.0), (None, 2.0), ("a", 3.0)], ["g", "x"]
+    )
+    with pytest.raises(ValueError, match="NULL group key"):
+        SEL.group_kth_smallest(df, "x", "g")
+
+
+def test_group_selection_walk_isin_many_groups(spark):
+    """Many (group, quantile) keys exercise the flat struct-isin walk
+    predicate; answers must equal the per-group numpy sort."""
+    rng = random.Random(23)
+    rows = [
+        (f"g{rng.randrange(40)}", rng.uniform(-1e3, 1e3))
+        for _ in range(6000)
+    ]
+    df = spark.createDataFrame(rows, ["g", "x"])
+    res = SEL.group_quantiles(df, "x", "g", [0.1, 0.5, 0.9])
+
+    by_g: dict[str, list[float]] = {}
+    for g, x in rows:
+        by_g.setdefault(g, []).append(x)
+    for g in by_g:
+        by_g[g].sort()
+    assert len(res) == 3 * len(by_g)
+    for g, qq, v, k, n in res:
+        assert n == len(by_g[g])
+        assert k == max(1, math.ceil(qq * n))
+        assert v == by_g[g][k - 1]
+
+
+def test_group_selection_int_group_keys_walk(spark):
+    """Integer group keys go through the same struct-isin walk (the
+    literal structs are cast to the frame's exact key type)."""
+    rows = [(i % 5, float((i * 13) % 101)) for i in range(500)]
+    df = spark.createDataFrame(rows, ["g", "x"])
+    res = SEL.group_kth_smallest(df, "x", "g", q=0.5)
+    for g, v, k, n in res:
+        mine = sorted(x for gg, x in rows if gg == g)
+        assert v == mine[k - 1]
+
+
+def _jobs(spark, name, fn):
+    """(fn(), number of Spark jobs fn ran) — counted by job group."""
+    sc = spark.sparkContext
+    sc.setJobGroup(name, "selection job count")
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(name))
+
+
+def test_one_group_face_runs_the_ungrouped_jobs(spark):
+    """A one-group group_kth_smallest is the same loop as kth_smallest:
+    same answer, same Spark jobs.  One far outlier puts every other
+    value into the first pass's bottom bin, so the search needs two
+    histogram passes before it walks."""
+    rng = random.Random(5)
+    vals = [rng.uniform(0.0, 1.0) for _ in range(5000)] + [1e9]
+    df = _df(spark, vals, ["only"] * len(vals))
+    ((g, *grouped),), g_jobs = _jobs(
+        spark, "sel_grouped", lambda: SEL.group_kth_smallest(df, "x", "g")
+    )
+    plain, p_jobs = _jobs(
+        spark, "sel_plain", lambda: SEL.kth_smallest(df, "x")
+    )
+    k = (len(vals) + 1) // 2
+    assert g == "only"
+    assert tuple(grouped) == plain == (sorted(vals)[k - 1], k, len(vals))
+    assert g_jobs == p_jobs, (g_jobs, p_jobs)
